@@ -168,6 +168,18 @@ object Bench {
     val orderSeed = sys.env.get("SPARK_GRAFT_BENCH_SEED").map(_.toLong)
       .getOrElse(new java.util.Random().nextLong())
     val timedOrder = new scala.util.Random(orderSeed).shuffle(queriesSorted)
+    // One timed run: its seconds, or None when it threw — the first
+    // message per query is kept for the detail line's `error_msgs`.
+    val firstError = scala.collection.mutable.Map.empty[String, String]
+    def timed(name: String)(run: => Unit): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { run; Some((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable =>
+        firstError.getOrElseUpdate(name,
+          e.toString.linesIterator.nextOption().getOrElse("").take(300))
+        None
+      }
+    }
     // Per-run success is tracked (not folded into the timing): a query
     // that fails fast must surface in `errors`, not masquerade as a small
     // plausible min. Per-query spread (max−min over successful runs) rides
@@ -180,12 +192,7 @@ object Bench {
       // garbage the PRECEDING queries left behind, so their number
       // depended on suite position, not code (r9 verdict #8).
       System.gc()
-      val samples = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
+      val samples = (1 to runs).map(_ => timed(name)(fn(spark, sfDir).count()))
       // Per-query isolation: queries that cache intermediate frames (the
       // connected-components edge sets, layout probes) would otherwise
       // accumulate storage across the 100+-query suite and perturb
@@ -195,7 +202,7 @@ object Bench {
       // storage is dropped, and each query's own timed runs still include
       // whatever caching its plan performs.
       try spark.catalog.clearCache() catch { case _: Throwable => () }
-      (name, samples.filter(_._2).map(_._1), samples.count(!_._2))
+      (name, samples.flatten, samples.count(_.isEmpty))
     }
     // Adaptive re-measure: queries whose primary-loop spread/min > 1 were
     // visibly perturbed by the host (a query's true cost can't halve run
@@ -212,12 +219,7 @@ object Bench {
       .flatMap { case (name, _, _) =>
         val extras = (1 to 2).flatMap { _ =>
           if (System.nanoTime() - reStart > reBudgetNs) None
-          else {
-            val t0 = System.nanoTime()
-            val ok = try { queryFn(name)(spark, sfDir).count(); true }
-              catch { case _: Throwable => false }
-            if (ok) Some((System.nanoTime() - t0) / 1e9) else None
-          }
+          else timed(name)(queryFn(name)(spark, sfDir).count())
         }
         try spark.catalog.clearCache() catch { case _: Throwable => () }
         if (extras.nonEmpty) Some(name -> extras) else None
@@ -264,6 +266,11 @@ object Bench {
       if (errors.isEmpty) ""
       else errors.map { case (k, n) => "\"" + f(k) + "\":" + n }
         .mkString(""","errors":{""", ",", "}")
+    val errorMsgs =
+      if (firstError.isEmpty) ""
+      else firstError.toSeq.sortBy(_._1)
+        .map { case (k, m) => "\"" + key(k) + "\":" + Verify.jsonString(m) }
+        .mkString(""","error_msgs":{""", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val respreadField =
       if (respreads.isEmpty) ""
@@ -291,7 +298,7 @@ object Bench {
       if (normRegress.isEmpty) ""
       else s""","norm_regress":${renderMap(normRegress, identity)}"""
     val detail =
-      f"""{"metric":"total_detail","value":$total%.3f,"unit":"sec","state":"warm","agg":"min","runs":$runs,"order_seed":$orderSeed$canaryField$normField,"queries":${renderMap(results, identity)},"spread":${renderMap(spreads, identity)}$respreadField,"plan_fp":${renderStrMap(planFps, identity)}${renderErr(identity)},"sf":"$sfDir"}"""
+      f"""{"metric":"total_detail","value":$total%.3f,"unit":"sec","state":"warm","agg":"min","runs":$runs,"order_seed":$orderSeed$canaryField$normField,"queries":${renderMap(results, identity)},"spread":${renderMap(spreads, identity)}$respreadField,"plan_fp":${renderStrMap(planFps, identity)}${renderErr(identity)}$errorMsgs,"sf":"$sfDir"}"""
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","state":"warm","agg":"min","runs":$runs$canaryField,"queries":${renderMap(results, key)}${renderErr(key)},"sf":"$sfDir"}"""
     // Best-effort durable copy of the detail line (plan_fp included): the

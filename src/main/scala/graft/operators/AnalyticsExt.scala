@@ -116,8 +116,7 @@ object AnalyticsExt extends QueryModule {
              |GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority), (c_mktsegment, o_orderpriority))
              |ORDER BY c_mktsegment NULLS FIRST, o_orderpriority NULLS FIRST""".stripMargin),
       (s, d) => {
-        Tables.registerAll(s, d)
-        s.sql("""SELECT c_mktsegment, o_orderpriority, count(*) AS n,
+        Tables.sql(s, d, """SELECT c_mktsegment, o_orderpriority, count(*) AS n,
                 |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
                 |FROM orders JOIN customer ON o_custkey = c_custkey
                 |GROUP BY GROUPING SETS ((c_mktsegment), (o_orderpriority), (c_mktsegment, o_orderpriority))

@@ -60,10 +60,6 @@ object Dedup extends QueryModule {
   def baseHash31(s: String): String =
     s"cast(conv(substring(md5($s), 1, 15), 16, 10) as bigint) % 2147483647"
 
-  /** Same base hash in DuckDB's dialect (hex-prefixed cast). */
-  def duckBaseHash31(s: String): String =
-    s"CAST(concat('0x', substring(md5($s), 1, 15)) AS BIGINT) % 2147483647"
-
   /** Polynomial fold of one band's signature slice into a bucket key —
     * values are < 2^31 so `acc * 1000003 + v < 2^52` stays exact. */
   private def bandHashSpark: String =

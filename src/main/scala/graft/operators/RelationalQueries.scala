@@ -283,8 +283,7 @@ object RelationalQueries extends QueryModule {
         // analyzer check when grouping columns are re-referenced from the
         // DataFrame API; the SQL path resolves cleanly and the text is
         // dialect-shared with the oracle.
-        Tables.registerAll(s, d)
-        s.sql("""SELECT n_name, o_orderpriority, count(*) AS n,
+        Tables.sql(s, d, """SELECT n_name, o_orderpriority, count(*) AS n,
                 |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
                 |FROM orders
                 |JOIN customer ON o_custkey = c_custkey
@@ -303,8 +302,7 @@ object RelationalQueries extends QueryModule {
              |GROUP BY CUBE(c_mktsegment, o_orderstatus)
              |ORDER BY c_mktsegment NULLS FIRST, o_orderstatus NULLS FIRST, g_seg, g_st, n""".stripMargin),
       (s, d) => {
-        Tables.registerAll(s, d)
-        s.sql("""SELECT c_mktsegment, o_orderstatus,
+        Tables.sql(s, d, """SELECT c_mktsegment, o_orderstatus,
                 |  CAST(GROUPING(c_mktsegment) AS INTEGER) AS g_seg,
                 |  CAST(GROUPING(o_orderstatus) AS INTEGER) AS g_st,
                 |  count(*) AS n
@@ -525,8 +523,7 @@ object RelationalQueries extends QueryModule {
              |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)
              |ORDER BY o_orderkey""".stripMargin),
       (s, d) => {
-        Tables.registerAll(s, d)
-        s.sql("""SELECT o_orderkey FROM orders o
+        Tables.sql(s, d, """SELECT o_orderkey FROM orders o
                 |WHERE o_totalprice > (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / count(*) FROM orders)
                 |  AND EXISTS (SELECT 1 FROM lineitem l
                 |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)
@@ -539,8 +536,7 @@ object RelationalQueries extends QueryModule {
              |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000)
              |ORDER BY c_custkey""".stripMargin),
       (s, d) => {
-        Tables.registerAll(s, d)
-        s.sql("""SELECT c_custkey FROM customer
+        Tables.sql(s, d, """SELECT c_custkey FROM customer
                 |WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_totalprice > 450000)
                 |ORDER BY c_custkey""".stripMargin)
       }),

@@ -29,7 +29,6 @@ object SearchQualityOps extends QueryModule {
 
   /** Fixed retrieval query for q106 (terms from the corpus vocabulary). */
   private val QueryTerms = Seq("data", "spark", "merge", "window")
-  private def sqlTerms: String = QueryTerms.map(t => s"'$t'").mkString(", ")
 
   val qs: Seq[Q] = Seq(
 

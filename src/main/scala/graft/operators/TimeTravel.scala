@@ -2051,22 +2051,10 @@ object TimeTravel extends QueryModule {
             post.exceptAll(before).withColumn("_change_type", lit("insert"))))
     }
 
-  /** Commit staged parquet a PARTITIONED DSv2 writer produced — each
-    * temp carries its partition VALUE, recorded per committed file as a
-    * `=` stats line, so a catalog `INSERT INTO` on a `PARTITIONED BY`
-    * table lands with the same log metadata [[commitPartitioned]]
-    * writes: equality reads prune files, the table reports
-    * KeyGroupedPartitioning, DPP drops value groups (r13 verdict #2). */
-  private[graft] def commitStagedPartitioned(s: SparkSession, root: String,
-      temps: Seq[(String, String)], schemaDdl: String, partCol: String,
-      removed: Seq[String] = Nil, props: Seq[String] = Nil,
-      txn: Option[String] = None): Int =
-    commitStagedPartitionedSpec(s, root,
-      temps.map { case (t, v) => (t, Seq(v)) }, schemaDdl,
-      Seq(IdentityTerm(partCol)), removed, props, txn)
-
-  /** The GENERAL form (r14 verdict #1): each staged temp carries one
-    * derived value PER SPEC TERM, recorded as that term's tagged stats
+  /** Commit staged parquet a PARTITIONED DSv2 writer produced, so a
+    * catalog `INSERT INTO` on a `PARTITIONED BY` table lands with the same
+    * log metadata [[commitPartitioned]] writes. Each staged temp carries
+    * one derived value PER SPEC TERM, recorded as that term's tagged stats
     * line — identity `=` lines keep the q214 equality-pruning/SPJ/DPP
     * machinery, `~month`/`~day`/`~year` lines the q195 generated-column
     * derivation, `#bucket:n` lines hash-bucket pruning. One commit shape

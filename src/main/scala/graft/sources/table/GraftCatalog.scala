@@ -148,7 +148,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog
     require(g >= 0 && g <= live,
       s"graft catalog: generation $g out of range [0, $live] for $ident")
     val schema = TimeTravel.schemaAsOf(root, g).getOrElse(
-      SparkSession.active.read.parquet(s"$root/data").schema)
+      graft.Tables.parquet(SparkSession.active, s"$root/data").schema)
     CatalogLogTable(schema, root, g, writable = gen.isEmpty)
   }
 

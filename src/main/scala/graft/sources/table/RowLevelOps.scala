@@ -58,16 +58,18 @@ final class GraftRowLevelOperationBuilder(root: String, gen: Int,
     // MATCHED THEN INSERT rows would land NULL or caller-supplied ids —
     // identityFill=false is correct for UPDATE/DELETE rewrites (existing
     // ids carry over) but would silently break the GENERATED ALWAYS
-    // unique/hwm invariant for merge-inserted rows. Refuse loudly.
+    // unique/hwm invariant for merge-inserted rows. Refuse loudly — and
+    // matched-only merges with it, since build() cannot see the clauses.
     if (info.command() == RowLevelOperation.Command.MERGE && gen >= 0 &&
         TimeTravel.propsAsOf(root, gen)
           .get(TimeTravel.IdentityColKey).exists(_.nonEmpty))
       throw new UnsupportedOperationException(
-        "time travel: MERGE INTO identity-column tables is not " +
-          "supported — merge-inserted rows would bypass the GENERATED " +
-          "ALWAYS id assignment (update/delete-only merges are blocked " +
-          "too: clauses aren't visible when the operation is built); " +
-          "insert on main, or drop the identity property")
+        "time travel: MERGE INTO identity-column tables is refused for " +
+          "every clause mix, update-only and delete-only merges included " +
+          "— the clauses aren't visible when the operation is built, and " +
+          "merge-inserted rows would bypass the GENERATED ALWAYS id " +
+          "assignment; use UPDATE or DELETE, insert on main, or drop the " +
+          "identity property")
     if (gen >= 0 &&
         TimeTravel.propsAsOf(root, gen)
           .get("graft.enableDeletionVectors").contains("true"))

@@ -73,7 +73,7 @@ class TableDataSource extends TableProvider {
     val root = TableDataSource.path(options)
     val gen = TableDataSource.gen(root, options)
     TimeTravel.schemaAsOf(root, gen).getOrElse(
-      SparkSession.active.read.parquet(s"$root/data").schema)
+      graft.Tables.parquet(SparkSession.active, s"$root/data").schema)
   }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],

@@ -287,7 +287,7 @@ object StreamingQueries extends QueryModule {
     * column the same way Tables.table does: nanos-as-long → micros). */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.parquet(s, s"$dir/events.parquet").schema
     // FileStreamSource requires a directory; expose the single events file
     // through a temp dir symlink (read-only testdata stays untouched).
     val streamDir = streamDirCache.computeIfAbsent(dir, { d =>

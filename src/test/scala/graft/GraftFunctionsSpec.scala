@@ -7,8 +7,7 @@ class GraftFunctionsSpec extends SparkSpec {
 
   test("graft_dot via spark.sql equals VectorFunctions.dot") {
     GraftFunctions.register(spark)
-    Tables.registerAll(spark, sf)
-    val sqlRes = spark.sql(
+    val sqlRes = Tables.sql(spark, sf,
       """SELECT vec_id, graft_dot(embedding, embedding) AS d
         |FROM embeddings ORDER BY vec_id LIMIT 20""".stripMargin).collect()
     val dfRes = Tables.table(spark, sf, "embeddings")
@@ -108,8 +107,7 @@ class GraftFunctionsSpec extends SparkSpec {
 
   test("graft_simhash64 and graft_minhash64 run from SQL") {
     GraftFunctions.register(spark)
-    Tables.registerAll(spark, sf)
-    val r = spark.sql(
+    val r = Tables.sql(spark, sf,
       s"""SELECT doc_id,
          |  graft_simhash64(transform(filter(split(lower(text), ' +'), t -> t != ''), t -> xxhash64(t))) AS sh,
          |  size(graft_minhash64(transform(filter(split(lower(text), ' +'), t -> t != ''), t -> xxhash64(t)))) AS sig_len

@@ -359,7 +359,8 @@ class TableSourceSpec extends SparkSpec {
         Option(t.getMessage).getOrElse("") +
           Option(t.getCause).map(c => Option(c.getMessage).getOrElse(""))
             .getOrElse("")
-      assert(m(em).contains("MERGE INTO identity-column"),
+      assert(m(em).contains("MERGE INTO identity-column") &&
+        m(em).contains("update-only and delete-only merges"),
         s"expected the identity MERGE refusal, got: ${m(em)}")
     }
   }
