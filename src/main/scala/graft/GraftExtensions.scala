@@ -195,5 +195,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Opt-in accelerator rule: count(DISTINCT x) → HLL sketch when
     // spark.graft.approxDistinct.enabled=true (see ApproxDistinctRewrite).
     e.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
+    // Global aggregates mixing DISTINCT and HLL++: split them and keep the
+    // HLL++ registers in one object buffer (GlobalSketchAggregates).
+    e.injectOptimizerRule(_ => graft.plans.GlobalSketchAggregates)
   }
 }

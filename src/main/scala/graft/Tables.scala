@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -97,14 +98,20 @@ object Tables {
     summaries.flatMap(n => leaves.find(_.getPath.getName == n)).headOption
       .orElse(leaves.find(st => !summaries.contains(st.getPath.getName)))
       .map { st =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromStatus(st, hadoopConf))
+        val reader = openParquet(HadoopInputFile.fromStatus(st, hadoopConf))
         val footer = try new Footer(st.getPath, reader.getFooter)
           finally reader.close()
         ParquetFileFormat.readSchemaFromFooter(footer,
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
       }
   }
+
+  /** A parquet file reader whose read options come from the file's own
+    * Hadoop conf. `ParquetFileReader.open(file)` builds its options from
+    * a fresh `Configuration`, which re-parses `core-default.xml` on every
+    * call. */
+  def openParquet(file: HadoopInputFile): ParquetFileReader =
+    ParquetFileReader.open(file, HadoopReadOptions.builder(file.getConfiguration).build())
 
   /** Run `text`, registering as temp views only the tables of [[all]] it
     * reads — in subqueries and CTE bodies too. */

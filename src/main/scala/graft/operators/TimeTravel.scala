@@ -1372,7 +1372,7 @@ object TimeTravel extends QueryModule {
     val schema = schemaOpt.get
     val (fs, _) = fsFor(root)
     def footerFields(name: String): Set[String] = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      val r = graft.Tables.openParquet(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(dataPath(root, name)), fs.getConf))
       try {
@@ -4776,7 +4776,7 @@ object TimeTravel extends QueryModule {
     * cost is ∝ the commit's file count, never the table's. */
   private def footerRows(root: String, name: String): Long = {
     val (fs, _) = fsFor(root)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+    val r = graft.Tables.openParquet(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(dataPath(root, name)), fs.getConf))
     try r.getRecordCount finally r.close()

@@ -335,7 +335,7 @@ final class CdfPartitionReader(file: String, schema: StructType,
   }
 
   private val (fileSchema, recordCount) = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+    val r = graft.Tables.openParquet(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
     try (r.getFileMetaData.getSchema, r.getRecordCount) finally r.close()
   }

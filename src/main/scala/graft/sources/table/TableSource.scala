@@ -1032,7 +1032,7 @@ final class FooterAggReader(paths: Seq[String], group: Option[String],
     val accs = needCols.map(c => c -> new ColAcc).toMap
     paths.foreach { p =>
       TableMetrics.footerOnlyFiles.add(p)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      val r = graft.Tables.openParquet(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new Path(p), conf))
       try {
