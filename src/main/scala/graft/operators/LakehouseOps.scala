@@ -174,7 +174,7 @@ object LakehouseOps extends QueryModule {
     if (TimeTravel.currentVersion(root) < 1)
       TimeTravel.renameColumn(s, root, "o_totalprice", "total_usd")
     if (TimeTravel.currentVersion(root) < 2)
-      TimeTravel.commitMapped(s, root,
+      TimeTravel.commit(s, root,
         base.filter(col("o_orderkey") % 2 === 1)
           .withColumnRenamed("o_totalprice", "total_usd"))
     if (TimeTravel.currentVersion(root) < 3)
@@ -571,10 +571,10 @@ object LakehouseOps extends QueryModule {
       (s, d) => {
         val root = WorkDirs.cached("graft_ttlz_", s"q185:$d")
         if (TimeTravel.currentVersion(root) < 0)
-          TimeTravel.commitZOrdered(s, root,
+          TimeTravel.commitZOrderedN(s, root,
             t(s, d, "orders").select("o_orderkey", "o_custkey",
               "o_orderpriority", "o_totalprice"),
-            "o_orderkey", "o_custkey", 16)
+            Seq("o_orderkey", "o_custkey"), 16)
         val mx = t(s, d, "orders").agg(max("o_custkey")).head().getLong(0)
         TimeTravel.readAsOfWhere(s, root, TimeTravel.currentVersion(root),
           "o_custkey", mx / 4, mx / 2)

@@ -353,14 +353,16 @@ object TimeTravel extends QueryModule {
     * feature this build does not implement. The UNBYPASSABLE check
     * lives inside [[commitNames]] (every write lands through it, and a
     * refusal there leaves the LOG unchanged); the staging verbs gate
-    * BEFORE writing anything through the shared `validateConstraints`
-    * seam, and the row-level DML / maintenance verbs before their
-    * heavy reads — a refusal never costs a full-dataset stage write.
+    * BEFORE writing anything through [[writePrologue]], and the
+    * row-level DML / maintenance verbs before their heavy reads — a
+    * refusal never costs a full-dataset stage write.
     * One resolution (listing + checkpoint/tail fold) per call, the
     * same cost class as the other per-commit folds. Old logs carry no
     * array and pass free. */
-  private[graft] def requireFeaturesWritable(root: String): Unit = {
-    val gen = currentVersion(root)
+  private[graft] def requireFeaturesWritable(root: String): Unit =
+    requireFeaturesWritableAt(root, currentVersion(root))
+
+  private def requireFeaturesWritableAt(root: String, gen: Int): Unit = {
     if (gen < 0) return
     val unknown =
       (writerFeaturesAsOf(root, gen) -- SupportedWriterFeatures).toSeq.sorted
@@ -443,56 +445,154 @@ object TimeTravel extends QueryModule {
 
   /** Commit `df` as the next generation: an APPEND, or — when `removed`
     * names files of earlier generations — a REWRITE (compaction,
-    * overwrite) that retires them in the same atomic commit. Returns the
-    * version the commit landed as. */
+    * overwrite) that retires them in the same atomic commit. `df` arrives
+    * under the LOGICAL schema and is stored under the column mapping's
+    * physical names, so files written before and after a rename stay
+    * byte-compatible. Returns the version the commit landed as. */
   def commit(s: SparkSession, root: String, df: DataFrame,
       removed: Seq[String] = Nil, flags: Seq[String] = Nil,
       txn: Option[String] = None): Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    // identity tables take their ids from the catalog INSERT/epoch
-    // path's fill — a raw library append would land df's values
-    // verbatim, outside the high-water mark (r19 review)
-    requireNotIdentity(root, "library appends")
-    val added = stagePlain(s, root, df)
+    val (_, phys) = writePrologue(s, root, df)
     // Optimistic concurrency: claim version N with an atomically-refusing
     // rename (claimVersion); the loser of a race re-reads the log and
     // retries at N+1 — data files are immutable, so the retry is
     // metadata-only. Before EVERY claim of a remove-commit, the remove set
-    // is re-validated against the would-be parent snapshot (r12 verdict
-    // #4): if a commit that won meanwhile already retired any of these
-    // files (two racing compactions), blind-landing a second remove would
-    // corrupt the log — that is a logical conflict, reported loudly for
-    // the caller to re-plan, never retried past. (Shared claim loop:
-    // commitNames.)
-    commitNames(s, root, added, removed,
+    // is re-validated against the would-be parent snapshot: if a commit
+    // that won meanwhile already retired any of these files (two racing
+    // compactions), blind-landing a second remove would corrupt the log —
+    // that is a logical conflict, reported loudly for the caller to
+    // re-plan, never retried past. (Shared claim loop: commitNames.)
+    commitNames(s, root, stageFiles(s, root, phys).map(_.name), removed,
       schemaDdl = Some(df.schema.toDDL), flags = flags, txn = txn)
   }
 
-  /** Stage `df` as plain parquet under `$root/data` and return the
-    * committed-to-be names — collision-free (uid-prefixed): files are
-    * live the moment the commit that lists them lands, and never renamed
-    * or rewritten afterwards. Shared by [[commit]] and [[commitMapped]]
-    * (which must NOT re-validate: its frame carries PHYSICAL names the
-    * logical-name constraints would not resolve against). */
-  private def stagePlain(s: SparkSession, root: String,
-      df: DataFrame): Seq[String] = {
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(stage)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
+  /** The checks every library write verb runs before it stages, against
+    * ONE resolution of the current generation (one listing, one props
+    * fold): the writer-feature gate, CHECK constraints and schema
+    * enforcement on the logical frame, the identity guard, then the
+    * translation to physical names. Identity tables take their ids from
+    * the catalog INSERT/epoch path's fill — a direct append would land
+    * `df`'s values verbatim, outside the high-water mark — so it refuses
+    * as `what`. DML and maintenance callers re-stage EXISTING ids and
+    * hand `ddlExpect`, their read epoch: they skip the guard and stage
+    * under THAT mapping — resolving it here would silently adopt an
+    * interleaved RENAME's mapping for rows read under the old names;
+    * [[commitNames]] re-verifies the epoch inside the lock. Everyone
+    * else stages under `colmapAt(current generation)`: the table's own
+    * mapping, or a branch's base-first merge. Returns the mapping and
+    * the physical frame. */
+  private def writePrologue(s: SparkSession, root: String, df: DataFrame,
+      ddlExpect: Option[(Map[String, String], Option[String])] = None,
+      what: String = "library appends",
+      colmapAt: Option[Int => Map[String, String]] = None)
+      : (Map[String, String], DataFrame) = {
+    val gen = currentVersion(root)
+    val props = if (gen < 0) Map.empty[String, String] else propsAsOf(root, gen)
+    requireFeaturesWritableAt(root, gen)
+    validateConstraintsAt(root, gen, df)
+    validateSchemaAt(root, gen, props, df.schema)
+    if (ddlExpect.isEmpty) requireNotIdentityIn(root, props, what)
+    val cm = ddlExpect.map(_._1).getOrElse(colmapAt.fold(
+      if (gen < 0) Map.empty[String, String] else colmapAsOf(root, gen))(_(gen)))
+    (cm, toPhysicalFrameCm(cm, df))
+  }
+
+  /** One staged file, renamed into `data/`: its committed name, the
+    * value of the `partitionBy` directory it was written under ("" for a
+    * flat stage), and its per-file log lines (`<name>|<tail>`). */
+  private final case class Staged(name: String, value: String,
+      lines: Seq[String])
+
+  /** The one staging step every write lands data through: write `df` to
+    * a fresh `stage-<uuid>` directory (split into `<key>=<value>`
+    * directories by `partitionBy` when given), list the parquet files in
+    * (directory, file) order, and rename each into `data/` as
+    * `<uid>-<tag(value, ordinal)><part name>` — collision-free, live the
+    * moment the commit that lists them lands, and never renamed or
+    * rewritten afterwards. `summarize`, when given, reads the staged
+    * files once and returns each file's log-line tails keyed by its path
+    * under the stage; a file it returns nothing for holds no rows and is
+    * not committed (a stat-less file would stay un-prunable forever),
+    * unless `keepUnsummarized`. The stage directory is deleted whether
+    * or not the write succeeds: `vacuum` lists only `data/` and `cdc/`,
+    * so nothing else would ever reclaim it. */
+  private def stageFiles(s: SparkSession, root: String, df: DataFrame,
+      partitionBy: Option[String] = None,
+      tag: (String, Int) => String = (_, _) => "",
+      summarize: Option[(DataFrame, Column) => Map[String, Seq[String]]] = None,
+      keepUnsummarized: Boolean = false): Seq[Staged] = {
+    val stage = new org.apache.hadoop.fs.Path(
+      s"$root/stage-${java.util.UUID.randomUUID()}")
     val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val added = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-      .map { f =>
-        val name = s"$uid-${f.getName}"
+    try {
+      partitionBy.fold(df.write)(df.write.partitionBy(_))
+        .mode("overwrite").parquet(stage.toString)
+      def parts(dir: org.apache.hadoop.fs.Path) =
+        fs.listStatus(dir).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).toSeq
+      // (directory value, path under the stage, staged file)
+      val files = partitionBy match {
+        case None => parts(stage).map(f => ("", f.getName, f))
+        case Some(key) =>
+          fs.listStatus(stage).filter(_.isDirectory).map(_.getPath)
+            .sortBy(_.getName).toSeq.flatMap { d =>
+              val dir = d.getName
+              if (!dir.startsWith(s"$key="))
+                throw new IllegalStateException(
+                  s"time travel: unexpected staging entry $dir")
+              val value =
+                java.net.URLDecoder.decode(dir.stripPrefix(s"$key="), "UTF-8")
+              parts(d).map(f => (value, s"$dir/${f.getName}", f))
+            }
+      }
+      val summary = summarize.map(_(s.read.parquet(stage.toString),
+        substring_index(col("_metadata.file_path"), "/",
+          if (partitionBy.isEmpty) -1 else -2)))
+      val kept = summary match {
+        case Some(m) if !keepUnsummarized => files.filter(f => m.contains(f._2))
+        case _ => files
+      }
+      val uid = java.util.UUID.randomUUID().toString.take(8)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
+      kept.zipWithIndex.map { case ((value, key, f), i) =>
+        val name = s"$uid-${tag(value, i)}${f.getName}"
         require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$root/data/$name")),
           s"time travel: staging rename of $f failed")
-        name
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    added
+        Staged(name, value,
+          summary.flatMap(_.get(key)).getOrElse(Nil).map(t => s"$name|$t"))
+      }
+    } finally fs.delete(stage, true)
+  }
+
+  /** The per-file `col|min|max` line tails of the staged files for each
+    * of `cols` — one narrow aggregate over the delta just written, grouped
+    * by file. A column whose values in a file are all NULL records no
+    * line: it cannot prune that file. */
+  private def minMaxLines(cols: Seq[String])(staged: DataFrame,
+      file: Column): Map[String, Seq[String]] = {
+    val aggs = cols.flatMap(c => Seq(min(col(c)), max(col(c))))
+    staged.groupBy(file.as("f")).agg(aggs.head, aggs.tail: _*).collect()
+      .map(r => r.getString(0) -> cols.indices.flatMap { j =>
+        (Option(r.get(1 + 2 * j)), Option(r.get(2 + 2 * j))) match {
+          case (Some(lo), Some(hi)) => Some(s"${cols(j)}|$lo|$hi")
+          case _ => None
+        }
+      }).toMap
+  }
+
+  /** Stage `df` hash-partitioned on the expression `p`, one file per
+    * distinct value (each value's rows land wholly in one shuffle task,
+    * and the dynamic-partition write splits the task's output by value),
+    * optionally sorted within files; the expression itself is written
+    * away by `partitionBy`. One task serves every value hashing to it,
+    * so part-file names REPEAT across value directories — a per-file
+    * ordinal tag `v<i>` keeps the committed names collision-free. */
+  private def stageByValue(s: SparkSession, root: String, df: DataFrame,
+      p: Column, sortWithin: Option[String] = None): Seq[Staged] = {
+    val keyed = df.withColumn("__p", p).repartition(col("__p"))
+    stageFiles(s, root,
+      sortWithin.fold(keyed)(c => keyed.sortWithinPartitions("__p", c)),
+      partitionBy = Some("__p"), tag = (_, i) => s"v$i-")
   }
 
   /** The claim primitive: publish `tmp` as `dst` atomically, REFUSING an
@@ -519,77 +619,39 @@ object TimeTravel extends QueryModule {
       case e: java.io.IOException if fs.exists(dst) => false
     }
 
-  /** Commit `df` BUCKETED by `keyCol` into `nBuckets` hash buckets, one
-    * parquet file per bucket, the bucket id encoded in the FILE NAME
-    * (`<uid>-b<k>-…`). This is the layout [[mergeInto]] prunes by: a
-    * row-level upsert only ever rewrites the files of buckets its source
-    * keys hash into. The bucket column itself is not stored — it is a
-    * pure function of the key, re-derived when needed. */
   /** The DDL epoch a rewrite read at: (column mapping, logical schema
     * DDL) at `gen`. DML verbs capture it at their read generation and
     * hand it to the staging commit verbs, which (a) translate through
     * THIS mapping — not one re-resolved at commit time — and (b) have
     * [[commitNames]] verify it still holds inside the commit lock, so
     * an interleaved RENAME/ALTER becomes an explicit conflict instead
-    * of silently staging stale names (r18 ADVICE). */
+    * of silently staging stale names. */
   private[graft] def ddlEpoch(root: String, gen: Int)
       : (Map[String, String], Option[String]) =
     (if (gen < 0) Map.empty[String, String] else colmapAsOf(root, gen),
      if (gen < 0) None else schemaAsOf(root, gen).map(_.toDDL))
 
+  /** Commit `df` BUCKETED by `keyCol` into `nBuckets` hash buckets, one
+    * parquet file per bucket, the bucket id encoded in the FILE NAME
+    * (`<uid>-b<k>-…`). This is the layout [[mergeInto]] prunes by: a
+    * row-level upsert only ever rewrites the files of buckets its source
+    * keys hash into. The bucket column itself is not stored — it is a
+    * pure function of the key, re-derived when needed. */
   def commitBucketed(s: SparkSession, root: String, df: DataFrame,
       keyCol: String, nBuckets: Int, removed: Seq[String] = Nil,
       cdc: Seq[String] = Nil,
       dvExpect: Option[Map[String, Option[String]]] = None,
       ddlExpect: Option[(Map[String, String], Option[String])] = None)
       : Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    // identity guard (r19 review): DML/maintenance callers hand
-    // ddlExpect (their read epoch) and re-stage EXISTING ids; a DIRECT
-    // append would land raw id values outside the high-water mark
-    if (ddlExpect.isEmpty) requireNotIdentity(root, "library appends")
-    // mapped tables (r18): logical frame in, PHYSICAL staging out —
-    // bucket ids ride file names so only the hash input column needs
-    // translating, and it hashes the same VALUES either way. A DML
-    // caller hands its READ generation's epoch (ddlExpect) — resolving
-    // at OUR currentVersion would silently adopt an interleaved
-    // RENAME's mapping for rows staged under the old names (r18
-    // ADVICE); commitNames re-verifies the epoch inside the lock.
-    val cmB = ddlExpect.map(_._1).getOrElse {
-      val g0 = currentVersion(root)
-      if (g0 < 0) Map.empty[String, String] else colmapAsOf(root, g0)
-    }
-    val dfP = toPhysicalFrameCm(cmB, df)
-    val physKey = cmB.getOrElse(keyCol, keyCol)
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    dfP.withColumn("gb", pmod(hash(col(physKey)), lit(nBuckets)))
-      .repartition(nBuckets, col("gb"))
-      .write.mode("overwrite").partitionBy("gb").parquet(stage)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val BucketDir = """gb=(\d+)""".r
-    val added = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .filter(_.isDirectory).sortBy(_.getPath.getName)
-      .flatMap { dir =>
-        val k = dir.getPath.getName match {
-          case BucketDir(b) => b.toInt
-          case other => throw new IllegalStateException(
-            s"time travel: unexpected staging entry $other")
-        }
-        fs.listStatus(dir.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .map { f =>
-            val name = s"$uid-b$k-${f.getName}"
-            require(fs.rename(f,
-                new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-              s"time travel: staging rename of $f failed")
-            name
-          }
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    commitNames(s, root, added, removed,
+    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    // bucket ids ride file names, so only the hash input column needs
+    // translating, and it hashes the same VALUES under either name
+    val staged = stageFiles(s, root,
+      phys.withColumn("gb",
+          pmod(hash(col(cm.getOrElse(keyCol, keyCol))), lit(nBuckets)))
+        .repartition(nBuckets, col("gb")),
+      partitionBy = Some("gb"), tag = (b, _) => s"b$b-")
+    commitNames(s, root, staged.map(_.name), removed,
       schemaDdl = Some(df.schema.toDDL), cdc = cdc, dvExpect = dvExpect,
       ddlExpect = ddlExpect)
   }
@@ -604,202 +666,45 @@ object TimeTravel extends QueryModule {
     * record each file's (min, max) of the sort column IN THE COMMIT —
     * Delta's data-skipping stats, kept in the log so range reads prune
     * files from METADATA alone. Stats are computed by one extra scan of
-    * the staged delta (cost ∝ the commit's bytes, never the table's),
-    * grouped by physical file via the _metadata column, and serialized
-    * as `file|col|min|max` strings — the tolerant array parser reads
-    * them back without a richer JSON layer. */
+    * the staged delta (cost ∝ the commit's bytes, never the table's) and
+    * serialized as `file|col|min|max` strings — the tolerant array parser
+    * reads them back without a richer JSON layer. On a mapped table the
+    * sort key translates and the stats lines key by PHYSICAL name (the
+    * q210 discipline the DSv2 pruner translates through). */
   def commitClustered(s: SparkSession, root: String, df: DataFrame,
       lSortCol: String, nFiles: Int, removed: Seq[String] = Nil,
       cdc: Seq[String] = Nil,
       dvExpect: Option[Map[String, Option[String]]] = None,
       ddlExpect: Option[(Map[String, String], Option[String])] = None)
       : Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    // identity guard (r19 review): DML/maintenance callers hand
-    // ddlExpect (their read epoch) and re-stage EXISTING ids; a DIRECT
-    // append would land raw id values outside the high-water mark
-    if (ddlExpect.isEmpty) requireNotIdentity(root, "library appends")
-    // mapped tables (r18): logical frame + sort key in, PHYSICAL staging
-    // and stat keys out, logical schema logged — the commitZOrdered
-    // discipline; identity on unmapped tables. DML callers hand their
-    // read epoch via ddlExpect (see commitBucketed).
-    val cmC = ddlExpect.map(_._1).getOrElse {
-      val g0 = currentVersion(root)
-      if (g0 < 0) Map.empty[String, String] else colmapAsOf(root, g0)
-    }
-    val dfP = toPhysicalFrameCm(cmC, df)
-    val sortCol = cmC.getOrElse(lSortCol, lSortCol)
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    dfP.repartitionByRange(nFiles, col(sortCol))
-      .sortWithinPartitions(sortCol)
-      .write.mode("overwrite").parquet(stage)
-    // per-staged-file stats: one narrow agg over the delta just written.
-    // A file with NO rows gets no stats row — such files are DROPPED from
-    // the commit (they carry nothing, and a stat-less file would stay
-    // conservatively un-prunable forever, turning later range ops into
-    // needless rewrites). A file whose keys are all NULL keeps its place
-    // but records no stats (min/max are null — cannot prune it).
-    val stats = s.read.parquet(stage)
-      .groupBy(col("_metadata.file_path").as("f"))
-      .agg(min(col(sortCol)).as("lo"), max(col(sortCol)).as("hi"))
-      .collect()
-      .map(r => r.getString(0).split('/').last ->
-        ((Option(r.get(1)).map(_.toString),
-          Option(r.get(2)).map(_.toString)))).toMap // name → (lo?, hi?)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val renamed = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-      .filter(f => stats.contains(f.getName)) // zero-row files: not committed
-      .map { f =>
-        val name = s"$uid-${f.getName}"
-        require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-          s"time travel: staging rename of $f failed")
-        (f.getName, name)
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    val statLines = renamed.flatMap { case (staged, fin) =>
-      stats.get(staged) match {
-        case Some((Some(lo), Some(hi))) => Some(s"$fin|$sortCol|$lo|$hi")
-        case _ => None
-      }
-    }
-    commitNames(s, root, renamed.map(_._2), removed, statLines,
+    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    val sortCol = cm.getOrElse(lSortCol, lSortCol)
+    val staged = stageFiles(s, root,
+      phys.repartitionByRange(nFiles, col(sortCol))
+        .sortWithinPartitions(sortCol),
+      summarize = Some(minMaxLines(Seq(sortCol))))
+    commitNames(s, root, staged.map(_.name), removed, staged.flatMap(_.lines),
       schemaDdl = Some(df.schema.toDDL), cdc = cdc, dvExpect = dvExpect,
       ddlExpect = ddlExpect)
   }
 
-  /** Commit `df` Z-ORDER-CLUSTERED on TWO columns, with per-file (min,
-    * max) stats for BOTH recorded in the commit: each column is affine-
-    * scaled to 16 bits (bounds from one narrow agg over the delta), the
-    * bits INTERLEAVED into a Morton code, and each file made EXACTLY one
-    * Z-prefix grid cell (`nFiles` a power of two → log₂ bits of prefix,
-    * a √n×√n tiling of the key plane) — so a range read on EITHER column
-    * prunes to ≈√ of the files, where single-column clustering serves
-    * only its own sort key. Cell assignment is a pure function of the
-    * keys, not sampled partition boundaries: the write hash-shuffles on
-    * the cell id and dynamic-partitions one file per cell (an empty cell
-    * writes nothing). The interleave is plain bitwise Catalyst
-    * expressions (32 shift/and/or terms — codegen'd, map-only); the Z
-    * columns are never stored. Column-mapped tables are supported (r18):
-    * the frame and key columns arrive LOGICAL and are translated through
-    * the mapping — files store physical names, stats lines key by
-    * physical name (the q210 discipline), the commit logs the logical
-    * schema. Delta's OPTIMIZE ZORDER BY, as a log-native commit. */
-  def commitZOrdered(s: SparkSession, root: String, df: DataFrame,
-      lc1: String, lc2: String, nFiles: Int, removed: Seq[String] = Nil,
-      flags: Seq[String] = Nil,
-      dvExpect: Option[Map[String, Option[String]]] = None,
-      ddlExpect: Option[(Map[String, String], Option[String])] = None)
-      : Int = {
-    require(nFiles > 0 && (nFiles & (nFiles - 1)) == 0,
-      s"time travel: z-order nFiles must be a power of two, got $nFiles")
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    // identity guard (r19 review): DML/maintenance callers hand
-    // ddlExpect (their read epoch) and re-stage EXISTING ids; a DIRECT
-    // append would land raw id values outside the high-water mark
-    if (ddlExpect.isEmpty) requireNotIdentity(root, "library appends")
-    // COLUMN-MAPPED tables (r17 verdict #1): `df` and the key columns
-    // arrive LOGICAL; files must store PHYSICAL names (byte-compatible
-    // across renames) and stats lines key by physical name (the q210
-    // stat-key discipline the DSv2 pruner translates through). Identity
-    // on unmapped tables — zero plan change. DML/maintenance callers
-    // hand their read epoch via ddlExpect (see commitBucketed).
-    val cmZ = ddlExpect.map(_._1).getOrElse {
-      val g0 = currentVersion(root)
-      if (g0 < 0) Map.empty[String, String] else colmapAsOf(root, g0)
-    }
-    val dfP = toPhysicalFrameCm(cmZ, df)
-    val c1 = cmZ.getOrElse(lc1, lc1)
-    val c2 = cmZ.getOrElse(lc2, lc2)
-    val prefixBits = java.lang.Integer.numberOfTrailingZeros(nFiles)
-    val mm = dfP.agg(
-      min(col(c1)).cast("long"), max(col(c1)).cast("long"),
-      min(col(c2)).cast("long"), max(col(c2)).cast("long")).head()
-    require(!mm.anyNull, s"time travel: z-order bounds of ($lc1, $lc2) are null")
-    val (lo1, hi1, lo2, hi2) =
-      (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
-    // scale via a DOUBLE factor: (col-lo)*65535 in long arithmetic
-    // overflows for ranges wider than ~1.4e14 and scrambles the z-codes
-    // (pruning silently degrades to nothing — r14 ADVICE). The double
-    // product is monotonic in (col-lo), which is all cell assignment
-    // needs; the per-file stats stay exact longs either way.
-    def scale16(c: String, lo: Long, hi: Long) =
-      least(lit(65535L), ((col(c).cast("long") - lit(lo)) *
-        lit(65535.0 / math.max(1L, hi - lo))).cast("long"))
-    val a16 = scale16(c1, lo1, hi1)
-    val b16 = scale16(c2, lo2, hi2)
-    val zval = (0 until 16).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(a16, i).bitwiseAND(lit(1L)), 2 * i + 1))
-        .bitwiseOR(shiftleft(shiftright(b16, i).bitwiseAND(lit(1L)), 2 * i))
-    }
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    dfP.withColumn("__z", zval)
-      .withColumn("__zcell", shiftright(col("__z"), 32 - prefixBits).cast("int"))
-      .repartition(nFiles, col("__zcell"))
-      .sortWithinPartitions("__zcell", "__z")
-      .drop("__z")
-      .write.partitionBy("__zcell").mode("overwrite").parquet(stage)
-    // per-file stats for BOTH dimensions — two lines per file; keys are
-    // the cell-dir-qualified path tail (bare part names repeat across
-    // cell dirs — the q181 collision)
-    val stats = s.read.parquet(stage)
-      .groupBy(col("_metadata.file_path").as("f"))
-      .agg(min(col(c1)).as("lo1"), max(col(c1)).as("hi1"),
-        min(col(c2)).as("lo2"), max(col(c2)).as("hi2"))
-      .collect()
-      .map(r => r.getString(0).split('/').takeRight(2).mkString("/") ->
-        ((Option(r.get(1)), Option(r.get(2)), Option(r.get(3)),
-          Option(r.get(4))))).toMap
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val renamed = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__zcell="))
-      .flatMap { d =>
-        fs.listStatus(d.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => (s"${d.getPath.getName}/${f.getName}", d.getPath.getName, f))
-      }
-      .sortBy(_._1)
-      .filter(e => stats.contains(e._1)) // zero-row files: not committed
-      .map { case (key, dirName, f) =>
-        val cell = dirName.stripPrefix("__zcell=")
-        val name = s"$uid-z$cell-${f.getName}"
-        require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-          s"time travel: staging rename of $f failed")
-        (key, name)
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    val statLines = renamed.flatMap { case (staged, fin) =>
-      stats.get(staged).toSeq.flatMap {
-        case (Some(l1), Some(h1), Some(l2), Some(h2)) =>
-          Seq(s"$fin|$c1|$l1|$h1", s"$fin|$c2|$l2|$h2")
-        case _ => Nil
-      }
-    }
-    commitNames(s, root, renamed.map(_._2), removed, statLines,
-      schemaDdl = Some(df.schema.toDDL), flags = flags,
-      dvExpect = dvExpect, ddlExpect = ddlExpect)
-  }
-
   /** Commit `df` Z-ORDER-CLUSTERED on N COLUMNS (2 ≤ n ≤ 4) with
     * per-file (min, max) stats for EVERY clustered column recorded in
-    * the commit — the r13 #6 generalization of [[commitZOrdered]]'s
-    * pinned 2×16-bit interleave. Each column is affine-scaled to a
-    * 16-bit budget (n·16 ≤ 64 keeps the code in one long), the bits
-    * interleaved ROUND-ROBIN from the most significant down — so the
-    * top `log₂ nFiles` prefix bits cycle through the dimensions and a
-    * range read on ANY clustered column (secondary, tertiary, …) prunes
-    * from log metadata, which a single-column sort gives only its own
-    * key. Cell assignment stays a pure function of the keys; the
-    * interleave is 16·n codegen'd shift/and/or terms; Z columns are
-    * never stored. */
+    * the commit. Each column is affine-scaled to a 16-bit budget (bounds
+    * from one narrow agg over the delta; n·16 ≤ 64 keeps the code in one
+    * long), the bits interleaved ROUND-ROBIN from the most significant
+    * down into a Morton code, and each file made EXACTLY one Z-prefix
+    * grid cell (`nFiles` a power of two → log₂ bits of prefix) — so the
+    * prefix bits cycle through the dimensions and a range read on ANY
+    * clustered column prunes from log metadata, which a single-column
+    * sort gives only its own key. Cell assignment is a pure function of
+    * the keys, not sampled partition boundaries: the write hash-shuffles
+    * on the cell id and dynamic-partitions one file per cell (an empty
+    * cell writes nothing); the cell rides the file name (`<uid>-z<cell>-…`).
+    * The interleave is 16·n codegen'd shift/and/or terms; Z columns are
+    * never stored. On a mapped table the key columns translate and the
+    * stats lines key by physical name. Delta's OPTIMIZE ZORDER BY, as a
+    * log-native commit. */
   def commitZOrderedN(s: SparkSession, root: String, df: DataFrame,
       lcols: Seq[String], nFiles: Int, removed: Seq[String] = Nil,
       flags: Seq[String] = Nil,
@@ -811,35 +716,22 @@ object TimeTravel extends QueryModule {
       s"time travel: z-order takes 2–4 columns, got $n")
     require(nFiles > 0 && (nFiles & (nFiles - 1)) == 0,
       s"time travel: z-order nFiles must be a power of two, got $nFiles")
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    // identity guard (r19 review): DML/maintenance callers hand
-    // ddlExpect (their read epoch) and re-stage EXISTING ids; a DIRECT
-    // append would land raw id values outside the high-water mark
-    if (ddlExpect.isEmpty) requireNotIdentity(root, "library appends")
-    // mapped tables: logical frame in, PHYSICAL staging + stat keys out
-    // (the same discipline as the 2-column form — r17 verdict #1);
-    // callers hand their read epoch via ddlExpect (see commitBucketed)
-    val cmZ = ddlExpect.map(_._1).getOrElse {
-      val g0 = currentVersion(root)
-      if (g0 < 0) Map.empty[String, String] else colmapAsOf(root, g0)
-    }
-    val dfP = toPhysicalFrameCm(cmZ, df)
-    val cols = lcols.map(c => cmZ.getOrElse(c, c))
+    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    val cols = lcols.map(c => cm.getOrElse(c, c))
     val prefixBits = java.lang.Integer.numberOfTrailingZeros(nFiles)
     require(prefixBits <= 16 * n,
       s"time travel: nFiles $nFiles exceeds the ${16 * n}-bit code")
     val mmExprs = cols.flatMap(c =>
       Seq(min(col(c)).cast("long"), max(col(c)).cast("long")))
-    val mm = dfP.agg(mmExprs.head, mmExprs.tail: _*).head()
+    val mm = phys.agg(mmExprs.head, mmExprs.tail: _*).head()
     require(!mm.anyNull,
       s"time travel: z-order bounds of ${lcols.mkString(", ")} are null")
     val bounds = cols.indices.map(j => (mm.getLong(2 * j), mm.getLong(2 * j + 1)))
     // scale via a DOUBLE factor: (col-lo)*65535 in long arithmetic
     // overflows for ranges wider than ~1.4e14 and scrambles the z-codes
-    // (pruning silently degrades to nothing — r14 ADVICE). The double
-    // product is monotonic in (col-lo), which is all cell assignment
-    // needs; the per-file stats stay exact longs either way.
+    // (pruning silently degrades to nothing). The double product is
+    // monotonic in (col-lo), which is all cell assignment needs; the
+    // per-file stats stay exact longs either way.
     def scale16(c: String, lo: Long, hi: Long) =
       least(lit(65535L), ((col(c).cast("long") - lit(lo)) *
         lit(65535.0 / math.max(1L, hi - lo))).cast("long"))
@@ -855,55 +747,18 @@ object TimeTravel extends QueryModule {
           b * n + (n - 1 - j)))
       }
     }
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    dfP.withColumn("__z", zval)
-      .withColumn("__zcell",
-        shiftright(col("__z"), 16 * n - prefixBits).cast("int"))
-      .repartition(nFiles, col("__zcell"))
-      .sortWithinPartitions("__zcell", "__z")
-      .drop("__z")
-      .write.partitionBy("__zcell").mode("overwrite").parquet(stage)
-    // per-file stats for EVERY dimension — n lines per file; keys are
-    // the cell-dir-qualified path tail (bare part names repeat across
-    // cell dirs — the q181 collision)
-    val statExprs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(min(col(c)).as(s"lo$i"), max(col(c)).as(s"hi$i"))
-    }
-    val stats = s.read.parquet(stage)
-      .groupBy(col("_metadata.file_path").as("f"))
-      .agg(statExprs.head, statExprs.tail: _*)
-      .collect()
-      .map(r => r.getString(0).split('/').takeRight(2).mkString("/") ->
-        cols.indices.map(j =>
-          (Option(r.get(1 + 2 * j)), Option(r.get(2 + 2 * j)))))
-      .toMap
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val renamed = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("__zcell="))
-      .flatMap { d =>
-        fs.listStatus(d.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(f => (s"${d.getPath.getName}/${f.getName}", d.getPath.getName, f))
-      }
-      .sortBy(_._1)
-      .filter(e => stats.contains(e._1)) // zero-row files: not committed
-      .map { case (key, dirName, f) =>
-        val cell = dirName.stripPrefix("__zcell=")
-        val name = s"$uid-z$cell-${f.getName}"
-        require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-          s"time travel: staging rename of $f failed")
-        (key, name)
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    val statLines = renamed.flatMap { case (staged, fin) =>
-      stats(staged).zip(cols).flatMap {
-        case ((Some(lo), Some(hi)), c) => Some(s"$fin|$c|$lo|$hi")
-        case _ => None
-      }
-    }
-    commitNames(s, root, renamed.map(_._2), removed, statLines,
+    // n stats lines per file, keyed by the cell-dir-qualified path (bare
+    // part names repeat across cell dirs)
+    val staged = stageFiles(s, root,
+      phys.withColumn("__z", zval)
+        .withColumn("__zcell",
+          shiftright(col("__z"), 16 * n - prefixBits).cast("int"))
+        .repartition(nFiles, col("__zcell"))
+        .sortWithinPartitions("__zcell", "__z")
+        .drop("__z"),
+      partitionBy = Some("__zcell"), tag = (cell, _) => s"z$cell-",
+      summarize = Some(minMaxLines(cols)))
+    commitNames(s, root, staged.map(_.name), removed, staged.flatMap(_.lines),
       schemaDdl = Some(df.schema.toDDL), flags = flags,
       dvExpect = dvExpect, ddlExpect = ddlExpect)
   }
@@ -1628,7 +1483,7 @@ object TimeTravel extends QueryModule {
           liveP.withColumn("_change_type", lit("update_preimage"))
             .unionByName(updatedP
               .withColumn("_change_type", lit("update_postimage"))))
-      val added = stagePlain(s, root, updatedP)
+      val added = stageFiles(s, root, updatedP).map(_.name)
       commitNames(s, root, added, Nil,
         // exact band stats for the appended files: range pruning on the
         // key keeps working without opening a footer (physical-keyed)
@@ -2252,14 +2107,15 @@ object TimeTravel extends QueryModule {
     * SQL CHECK semantics: a NULL predicate passes. */
   private def validateConstraints(s: SparkSession, root: String,
       df: DataFrame): Unit = {
-    // the shared pre-staging seam for the writer-feature gate: the bulk
-    // staging verbs (clustered/bucketed/zordered/partitioned/bloomed
-    // commits) validate BEFORE writing the whole input to a stage dir —
-    // without the gate here they would stage a full dataset only for
-    // commitNames to refuse it (r18 review; the fold is cheap next to
-    // the staging write it avoids)
-    requireFeaturesWritable(root)
+    // the writer-feature gate rides along: a refusal must come before
+    // the caller's staging write, not from commitNames after it
     val gen = currentVersion(root)
+    requireFeaturesWritableAt(root, gen)
+    validateConstraintsAt(root, gen, df)
+  }
+
+  private def validateConstraintsAt(root: String, gen: Int,
+      df: DataFrame): Unit = {
     if (gen < 0) return
     val cs = constraintsAsOf(root, gen)
     if (cs.isEmpty) return
@@ -2283,8 +2139,13 @@ object TimeTravel extends QueryModule {
   private def validateSchema(s: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType): Unit = {
     val gen = currentVersion(root)
-    if (gen < 0) return
-    if (!propsAsOf(root, gen).get("graft.enforceSchema").contains("true"))
+    if (gen >= 0) validateSchemaAt(root, gen, propsAsOf(root, gen), schema)
+  }
+
+  private def validateSchemaAt(root: String, gen: Int,
+      props: Map[String, String],
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    if (gen < 0 || !props.get("graft.enforceSchema").contains("true"))
       return
     schemaAsOf(root, gen).foreach { logged =>
       val want = logged.fields.map(f => (f.name, f.dataType)).toSeq
@@ -2563,18 +2424,14 @@ object TimeTravel extends QueryModule {
     * against the table's live set. Returns the branch sequence number. */
   def commitToBranch(s: SparkSession, root: String, name: String,
       df: DataFrame): Int = {
-    validateConstraints(s, root, df) // includes the writer-feature gate
-    validateSchema(s, root, df.schema)
-    requireNotIdentity(root, "branch appends")
-    val cur = currentVersion(root)
-    val base = branchesFor(root, cur).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"time travel: no branch '$name' under $root"))
     // base-first merged mapping: base-era logical names keep resolving
     // across main-side renames, post-fork adds get their fresh physical
     // names (see branchColmap)
-    val physDf = toPhysicalFrameCm(branchColmap(root, base), df)
-    val added = stagePlain(s, root, physDf)
+    val (_, phys) = writePrologue(s, root, df, what = "branch appends",
+      colmapAt = Some(cur => branchColmap(root, branchesFor(root, cur)
+        .getOrElse(name, throw new IllegalArgumentException(
+          s"time travel: no branch '$name' under $root")))))
+    val added = stageFiles(s, root, phys).map(_.name)
     val nrows = added.map(f => s"$f|${footerRows(root, f)}")
     commitNamesToBranch(root, name, added, Nil, nrows, df.schema.toDDL)
   }
@@ -2590,13 +2447,10 @@ object TimeTravel extends QueryModule {
       schemaDdl: String, txn: Option[String] = None): Int = {
     val (fs, _) = fsFor(root)
     def render(k: Int, ts: Long) =
-      s"""{"branch":["${jsonEsc(name)}"],"bseq":$k,"ts":["$ts"],""" +
-        s""""added":[${added.map("\"" + jsonEsc(_) + "\"").mkString(",")}],""" +
-        s""""removed":[${removed.map("\"" + jsonEsc(_) + "\"").mkString(",")}],""" +
-        s""""nrows":[${nrows.map("\"" + jsonEsc(_) + "\"").mkString(",")}],""" +
-        (if (txn.isEmpty) ""
-         else s""""txn":["${jsonEsc(txn.get)}"],""") +
-        s""""schemav":["${jsonEsc(schemaDdl)}"]}"""
+      s"""{"branch":${jsonArr(Seq(name))},"bseq":$k,"ts":["$ts"],""" +
+        s""""added":${jsonArr(added)},"removed":${jsonArr(removed)},""" +
+        s""""nrows":${jsonArr(nrows)}""" + jsonField("txn", txn.toSeq) +
+        jsonField("schemav", Seq(schemaDdl)) + "}"
     var k = branchCommits(root, name).lastOption.map(_._1 + 1).getOrElse(0)
     val uid = java.util.UUID.randomUUID().toString.take(8)
     var committed = false
@@ -2680,13 +2534,16 @@ object TimeTravel extends QueryModule {
     * copy-on-write rewrites carry EXISTING ids). */
   private def requireNotIdentity(root: String, what: String): Unit = {
     val gen = currentVersion(root)
-    if (gen >= 0 &&
-        propsAsOf(root, gen).get(IdentityColKey).exists(_.nonEmpty))
+    if (gen >= 0) requireNotIdentityIn(root, propsAsOf(root, gen), what)
+  }
+
+  private def requireNotIdentityIn(root: String, props: Map[String, String],
+      what: String): Unit =
+    if (props.get(IdentityColKey).exists(_.nonEmpty))
       throw new UnsupportedOperationException(
         s"time travel: $what on identity-column tables are not " +
           "supported — ids are assigned against main's high-water " +
           "mark; insert on main, or drop the identity property")
-  }
 
   /** The branch's resolved appId → newest-txn-version map — branch
     * commits carry their own txn records (the streaming WAP epoch
@@ -2964,7 +2821,7 @@ object TimeTravel extends QueryModule {
     if (touched.isEmpty) return -1
     val keptL = readBranchSubset(s, root, name, Some(touched))
       .filter(!col(statCol).between(lo, hi))
-    val added = stagePlain(s, root, toPhysicalFrameCm(cm, keptL))
+    val added = stageFiles(s, root, toPhysicalFrameCm(cm, keptL)).map(_.name)
     val nrows = added.map(f => s"$f|${footerRows(root, f)}")
     val ddl = schemaDdl.getOrElse(
       schemaAsOf(root, base).map(_.toDDL).getOrElse(keptL.schema.toDDL))
@@ -2995,7 +2852,7 @@ object TimeTravel extends QueryModule {
     val rewritten = readBranchSubset(s, root, name, Some(touched))
       .withColumn(setCol, when(band, setTo).otherwise(col(setCol)))
     validateConstraints(s, root, rewritten)
-    val added = stagePlain(s, root, toPhysicalFrameCm(cm, rewritten))
+    val added = stageFiles(s, root, toPhysicalFrameCm(cm, rewritten)).map(_.name)
     val nrows = added.map(f => s"$f|${footerRows(root, f)}")
     val ddl = schemaDdl.getOrElse(
       schemaAsOf(root, base).map(_.toDDL).getOrElse(rewritten.schema.toDDL))
@@ -3211,7 +3068,7 @@ object TimeTravel extends QueryModule {
     * RENAME COLUMN under column mapping): not one data byte moves — the
     * parquet files keep the old PHYSICAL name, the logged schema gains
     * the new LOGICAL name, and a mapping line ties them together for
-    * every later read ([[readAsOfMapped]]) and write ([[commitMapped]]).
+    * every later read ([[readAsOfMapped]]) and write ([[commit]]).
     * At 100 TB this turns a schema refactor from a full-table rewrite
     * into one commit write; older snapshots keep the old name, because
     * the mapping is versioned with everything else in the log. */
@@ -3348,23 +3205,6 @@ object TimeTravel extends QueryModule {
       case (k, v) if k.startsWith("graft.default.") && v.nonEmpty =>
         k.stripPrefix("graft.default.") -> v
     }
-
-  /** Append through the mapping: `df` arrives with the LOGICAL schema and
-    * is STORED under the physical names, so files written before and
-    * after a rename stay byte-compatible (one read schema serves all).
-    * Constraints and schema enforcement run against the logical frame —
-    * the names users wrote them in. */
-  def commitMapped(s: SparkSession, root: String, df: DataFrame): Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    val gen = currentVersion(root)
-    val cmap = if (gen < 0) Map.empty[String, String]
-               else colmapAsOf(root, gen)
-    val physDf = df.select(df.schema.fieldNames.toSeq.map(n =>
-      col(n).as(cmap.getOrElse(n, n))): _*)
-    val added = stagePlain(s, root, physDf)
-    commitNames(s, root, added, Nil, schemaDdl = Some(df.schema.toDDL))
-  }
 
   /** AS-OF read through the mapping: parquet is scanned under the
     * PHYSICAL read schema (files that predate an added column null-fill
@@ -3552,7 +3392,7 @@ object TimeTravel extends QueryModule {
     // raises; autoCompactIfDue already swallows it and retries on the
     // next commit (r17 ADVICE).
     val dvAtRead = dvsFor(root, gen)
-    val added = stagePlain(s, root, physDf)
+    val added = stageFiles(s, root, physDf).map(_.name)
     commitNames(s, root, added, removed,
       schemaDdl = schemaAsOf(root, gen).map(_.toDDL)
         .orElse(Some(physDf.schema.toDDL)),
@@ -3643,29 +3483,26 @@ object TimeTravel extends QueryModule {
       compactSmall(s, root, smallRows, minFiles)
       ()
     } catch { case scala.util.control.NonFatal(e) =>
-      // still best-effort (a compaction conflict must not fail the
-      // append that triggered it), but a PERSISTENT failure — corrupted
-      // log, permission error — must not degrade to silent small-file
-      // accumulation: warn once per table root (r18 verdict)
-      if (autoCompactWarned.putIfAbsent(root, true) == null)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"graft auto-compact under $root failed (append unaffected; " +
-            "maintenance retries on the next commit; further failures " +
-            s"for this root are not re-logged): $e")
+      warnOnce("auto-compact", root, e)
     }
 
-  /** Roots whose auto-compact failure was already logged — the
-    * once-per-root gate keeping the best-effort path quiet but not
-    * silent. */
-  private val autoCompactWarned =
+  /** Log a failed best-effort maintenance step (auto-compaction,
+    * auto-checkpoint) once per (step, root). The step never fails the
+    * commit that triggered it — a compaction conflict retries on the
+    * next commit — but a PERSISTENT failure (corrupted log, permission
+    * error) must not degrade silently into small-file accumulation or an
+    * ever-growing commit tail. */
+  private def warnOnce(step: String, root: String, e: Throwable): Unit =
+    if (maintWarned.putIfAbsent(s"$step $root", true) == null)
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"graft $step under $root failed (the commit stands; retried on " +
+          s"a later commit; further failures for this root are not " +
+          s"re-logged): $e")
+
+  /** The (step, root) pairs [[warnOnce]] already logged. */
+  private val maintWarned =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
-  /** OPTIMIZE … ZORDER BY (Delta's clustering compaction): rewrite the
-    * whole current snapshot Z-ORDER-clustered on `(c1, c2)` in one
-    * `nodata` commit — rows unchanged (change feeds skip it), deletion
-    * vectors materialized away by the read-through, fresh two-dimensional
-    * per-file stats recorded, every prior file retired. The maintenance
-    * op that turns an append-accumulated table into the q185 layout. */
   /** The LOGICAL view of a physical-named frame at `gen` — the colmap
     * projection [[readAsOfMapped]] applies, shared by the maintenance
     * rewrites that read physical (defaults filled, widening
@@ -3697,34 +3534,17 @@ object TimeTravel extends QueryModule {
       (logical.columns.toSeq.filterNot(extra.contains).map(n =>
         col(n).as(cm.getOrElse(n, n))) ++ extra.map(col)): _*)
 
-  def compactZOrdered(s: SparkSession, root: String, c1: String,
-      c2: String, nFiles: Int): Int = {
-    val gen = currentVersion(root)
-    require(gen >= 0, s"time travel: cannot compact empty table $root")
-    requireFeaturesWritable(root)
-    val files = snapshotFiles(root, gen)
-    require(files.nonEmpty, s"time travel: nothing to z-order under $root")
-    // COLUMN-MAPPED tables are supported (r18, lifting the r17 refusal):
-    // the snapshot reads PHYSICAL (renamed columns keep their bytes,
-    // defaults filled, widened files up-converted, DVs applied), projects
-    // to the logical schema, and commitZOrdered's mapped-aware staging
-    // translates the key columns and stat keys back through the mapping —
-    // one RENAME COLUMN no longer freezes a table's clustered maintenance.
-    // dvExpect: the rewrite read gen's DV state; a racing DV-only commit
-    // must conflict, not silently resurrect (the commitNoData discipline).
-    val dvAtRead = dvsFor(root, gen)
-    commitZOrdered(s, root,
-      toLogicalFrame(root, gen, readFilesFilledDvs(s, root, gen, files)),
-      c1, c2, nFiles, removed = files, flags = Seq("nodata"),
-      dvExpect = Some(files.map(f => f -> dvAtRead.get(f).map(_._1)).toMap),
-      ddlExpect = Some(ddlEpoch(root, gen)))
-  }
-
-  /** OPTIMIZE … ZORDER BY over N columns (2–4): the [[compactZOrdered]]
-    * maintenance rewrite through [[commitZOrderedN]]'s round-robin
-    * interleave — a range read on ANY clustered dimension prunes from
-    * log metadata after the rewrite. Same mapped-table, dvExpect and
-    * `nodata` discipline as the 2-column form. */
+  /** OPTIMIZE … ZORDER BY (Delta's clustering compaction) over 2–4
+    * columns: rewrite the whole current snapshot through
+    * [[commitZOrderedN]] in one `nodata` commit — rows unchanged (change
+    * feeds skip it), deletion vectors materialized away by the
+    * read-through, fresh per-file stats for every clustered column, every
+    * prior file retired; a range read on ANY clustered dimension prunes
+    * from log metadata after the rewrite. The maintenance op that turns
+    * an append-accumulated table into the q185 layout. Column-mapped
+    * tables read PHYSICAL (renamed columns keep their bytes, defaults
+    * filled, widened files up-converted), project to the logical schema,
+    * and stage back through the mapping of the read epoch. */
   def compactZOrderedN(s: SparkSession, root: String, cols: Seq[String],
       nFiles: Int): Int = {
     val gen = currentVersion(root)
@@ -3732,6 +3552,8 @@ object TimeTravel extends QueryModule {
     requireFeaturesWritable(root)
     val files = snapshotFiles(root, gen)
     require(files.nonEmpty, s"time travel: nothing to z-order under $root")
+    // dvExpect: the rewrite read gen's DV state; a racing DV-only commit
+    // must conflict, not silently resurrect (the commitNoData discipline)
     val dvAtRead = dvsFor(root, gen)
     commitZOrderedN(s, root,
       toLogicalFrame(root, gen, readFilesFilledDvs(s, root, gen, files)),
@@ -3796,63 +3618,18 @@ object TimeTravel extends QueryModule {
     * categorical-partitioning discipline. */
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
       partCol: String, removed: Seq[String] = Nil): Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    requireNotIdentity(root, "library appends") // r19 review
-    val renamed = stagePartitioned(s, root, df, col(partCol), None)
+    val (cm, phys) = writePrologue(s, root, df)
+    val pc = cm.getOrElse(partCol, partCol)
+    val staged = stageByValue(s, root, phys, col(pc))
     // '|' is the stats-line separator: a value carrying it would lose
-    // its pruning line silently at read resolution (r14 ADVICE) — refuse
-    renamed.collectFirst { case (_, v) if v.contains("|") => v }.foreach(v =>
+    // its pruning line silently at read resolution — refuse
+    staged.map(_.value).find(_.contains("|")).foreach(v =>
       throw new IllegalArgumentException(
         s"time travel: partition value '$v' contains '|' — the log's " +
           "stats-line separator; partition on a clean column"))
-    commitNames(s, root, renamed.map(_._1), removed,
-      stats = renamed.map { case (n, v) => s"$n|$partCol|=|$v" },
+    commitNames(s, root, staged.map(_.name), removed,
+      stats = staged.map(st => s"${st.name}|$pc|=|${st.value}"),
       schemaDdl = Some(df.schema.toDDL))
-  }
-
-  /** Stage `df` hash-partitioned on the expression `p` (one file per
-    * distinct value — each value's rows land wholly in one shuffle task,
-    * and the dynamic-partition write splits the task's output by value),
-    * optionally sorted within files, and return (committed name, value)
-    * pairs. The partition expression itself is written away by
-    * `partitionBy`. Shared by [[commitPartitioned]],
-    * [[commitPartitionedGeneratedMonth]] and
-    * [[compactClusteredIncremental]]. */
-  private def stagePartitioned(s: SparkSession, root: String, df: DataFrame,
-      p: Column, sortWithin: Option[String]): Seq[(String, String)] = {
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    val keyed = df.withColumn("__p", p).repartition(col("__p"))
-    sortWithin.fold(keyed)(c => keyed.sortWithinPartitions("__p", c))
-      .write.mode("overwrite").partitionBy("__p").parquet(stage)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val PartDir = """__p=(.*)""".r
-    // one shuffle task serves every value hashing to it, so part-file
-    // names REPEAT across the __p= dirs — a per-file ordinal keeps the
-    // committed names collision-free
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .filter(_.isDirectory).sortBy(_.getPath.getName)
-      .flatMap { dir =>
-        val value = dir.getPath.getName match {
-          case PartDir(v) => java.net.URLDecoder.decode(v, "UTF-8")
-          case other => throw new IllegalStateException(
-            s"time travel: unexpected staging entry $other")
-        }
-        fs.listStatus(dir.getPath).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-          .map(f => (f, value))
-      }.toSeq
-    val renamed = staged.zipWithIndex.map { case ((f, value), i) =>
-      val name = s"$uid-v$i-${f.getName}"
-      require(fs.rename(f,
-          new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-        s"time travel: staging rename of $f failed")
-      (name, value)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    renamed
   }
 
   /** Commit `df` partitioned by a GENERATED month key derived from the
@@ -3866,13 +3643,11 @@ object TimeTravel extends QueryModule {
     * materializing, filtering, or even knowing about a partition column. */
   def commitPartitionedGeneratedMonth(s: SparkSession, root: String,
       df: DataFrame, baseCol: String, removed: Seq[String] = Nil): Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    requireNotIdentity(root, "library appends") // r19 review
-    val renamed = stagePartitioned(s, root, df,
-      date_format(col(baseCol), "yyyy-MM"), None)
-    commitNames(s, root, renamed.map(_._1), removed,
-      stats = renamed.map { case (n, v) => s"$n|$baseCol|~month|$v" },
+    val (cm, phys) = writePrologue(s, root, df)
+    val bc = cm.getOrElse(baseCol, baseCol)
+    val staged = stageByValue(s, root, phys, date_format(col(bc), "yyyy-MM"))
+    commitNames(s, root, staged.map(_.name), removed,
+      stats = staged.map(st => s"${st.name}|$bc|~month|${st.value}"),
       schemaDdl = Some(df.schema.toDDL))
   }
 
@@ -3976,13 +3751,13 @@ object TimeTravel extends QueryModule {
       .agg(min(col(physSort)).as("lo"), max(col(physSort)).as("hi"))
       .collect()
       .map(r => r.getInt(0).toString -> ((r.get(1), r.get(2)))).toMap
-    val renamed = stagePartitioned(s, root, rewrite,
+    val staged = stageByValue(s, root, rewrite,
       binOf(col(physSort)), Some(physSort))
-    val statLines = renamed.flatMap { case (n, v) =>
-      binStats.get(v).map { case (l, h) => s"$n|$physSort|$l|$h" }
+    val statLines = staged.flatMap { st =>
+      binStats.get(st.value).map { case (l, h) => s"${st.name}|$physSort|$l|$h" }
     }
     val removedAll = touchedFiles ++ fresh
-    commitNames(s, root, renamed.map(_._1),
+    commitNames(s, root, staged.map(_.name),
       removed = removedAll, stats = statLines,
       flags = Seq("nodata"),
       schemaDdl = schemaAsOf(root, gen).map(_.toDDL),
@@ -4554,9 +4329,9 @@ object TimeTravel extends QueryModule {
     val stats = Seq.newBuilder[String]
     val removedAll = Seq.newBuilder[String]
     groups.toSeq.sortBy(_._2.head).foreach { case (key, fls) =>
-      val added = stagePlain(s, root,
+      val added = stageFiles(s, root,
         readFilesFilledDvs(s, root, gen, fls)
-          .coalesce(math.max(1, nOutFor(fls))))
+          .coalesce(math.max(1, nOutFor(fls)))).map(_.name)
       adds ++= added
       removedAll ++= fls
       stats ++= added.flatMap(n => key.map(line => s"$n|$line"))
@@ -4678,51 +4453,35 @@ object TimeTravel extends QueryModule {
     * files carry. Integral keys only (the point-lookup shape). */
   def commitBloomed(s: SparkSession, root: String, df: DataFrame,
       keyCol: String, nFiles: Int, removed: Seq[String] = Nil): Int = {
-    validateConstraints(s, root, df)
-    validateSchema(s, root, df.schema)
-    requireNotIdentity(root, "library appends") // r19 review
-    val stage = s"$root/stage-${java.util.UUID.randomUUID()}"
-    df.repartition(nFiles, col(keyCol)).write.mode("overwrite").parquet(stage)
-    val staged = s.read.parquet(stage)
+    val (cm, phys) = writePrologue(s, root, df)
+    val key = cm.getOrElse(keyCol, keyCol)
     val k = 7
-    val m = {
-      val perFile = math.max(1L, staged.count() / math.max(1, nFiles))
-      val want = perFile * 10
-      var p = 1024
-      while (p < want && p < (1 << 28)) p <<= 1
-      p
-    }
-    val posUdf = udf((key: Long) => bloomPositions(key, m, k).toSeq)
-    val packUdf = udf((pos: Seq[Int]) => {
-      val bytes = new Array[Byte]((m + 7) / 8)
-      pos.foreach(p => bytes(p >>> 3) = (bytes(p >>> 3) | (1 << (p & 7))).toByte)
-      java.util.Base64.getEncoder.encodeToString(bytes)
-    })
-    val blobs = staged
-      .select(col("_metadata.file_path").as("f"),
-        explode(posUdf(col(keyCol).cast("long"))).as("p"))
-      .groupBy("f").agg(collect_set(col("p")).as("ps"))
-      .select(col("f"), packUdf(col("ps")).as("b64"))
-      .collect()
-      .map(r => r.getString(0).split('/').last -> r.getString(1)).toMap
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val (fs, _) = fsFor(root)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$root/data"))
-    val renamed = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-      .map { f =>
-        val name = s"$uid-${f.getName}"
-        require(fs.rename(f, new org.apache.hadoop.fs.Path(s"$root/data/$name")),
-          s"time travel: staging rename of $f failed")
-        (f.getName, name)
-      }.toSeq
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    val bloomLines = renamed.flatMap { case (staged0, fin) =>
-      blobs.get(staged0).map(b64 => s"$fin|$keyCol|$m|$k|$b64")
-    }
-    commitNames(s, root, renamed.map(_._2), removed,
-      schemaDdl = Some(df.schema.toDDL), blooms = bloomLines)
+    // every staged file is committed: one whose keys are all NULL (or
+    // that holds no rows) just carries no filter and stays scannable
+    val staged = stageFiles(s, root, phys.repartition(nFiles, col(key)),
+      keepUnsummarized = true, summarize = Some { (st, file) =>
+        val m = {
+          val perFile = math.max(1L, st.count() / math.max(1, nFiles))
+          val want = perFile * 10
+          var p = 1024
+          while (p < want && p < (1 << 28)) p <<= 1
+          p
+        }
+        val posUdf = udf((key: Long) => bloomPositions(key, m, k).toSeq)
+        val packUdf = udf((pos: Seq[Int]) => {
+          val bytes = new Array[Byte]((m + 7) / 8)
+          pos.foreach(p => bytes(p >>> 3) = (bytes(p >>> 3) | (1 << (p & 7))).toByte)
+          java.util.Base64.getEncoder.encodeToString(bytes)
+        })
+        st.select(file.as("f"), explode(posUdf(col(key).cast("long"))).as("p"))
+          .groupBy("f").agg(collect_set(col("p")).as("ps"))
+          .select(col("f"), packUdf(col("ps")).as("b64"))
+          .collect()
+          .map(r => r.getString(0) -> Seq(s"$key|$m|$k|${r.getString(1)}"))
+          .toMap
+      })
+    commitNames(s, root, staged.map(_.name), removed,
+      schemaDdl = Some(df.schema.toDDL), blooms = staged.flatMap(_.lines))
   }
 
   /** The per-file bloom filters visible at generation `gen`,
@@ -4765,11 +4524,17 @@ object TimeTravel extends QueryModule {
     base.filter(col(keyCol).isin(keys: _*))
   }
 
-  /** The shared claim loop: publish `added`/`removed` as the next
-    * generation (extracted from [[commit]] so bucketed commits reuse the
-    * same optimistic protocol + conflict validation). */
   private def jsonEsc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** `["a","b"]`, every element escaped. */
+  private def jsonArr(ls: Seq[String]): String =
+    ls.map("\"" + jsonEsc(_) + "\"").mkString("[", ",", "]")
+
+  /** `,"key":[…]`, or nothing for an empty array — how commits and
+    * checkpoints carry their optional arrays. */
+  private def jsonField(key: String, ls: Seq[String]): String =
+    if (ls.isEmpty) "" else s""","$key":${jsonArr(ls)}"""
 
   /** Parquet-footer row count of a committed file — a metadata read (no
     * column data touched); one open per ADDED file per commit, so the
@@ -4782,7 +4547,10 @@ object TimeTravel extends QueryModule {
     try r.getRecordCount finally r.close()
   }
 
-  private def commitNames(s: SparkSession, root: String,
+  /** The shared claim loop: publish `added`/`removed` as the next
+    * generation through the same optimistic protocol and conflict
+    * validation for every write. */
+  private[graft] def commitNames(s: SparkSession, root: String,
       added: Seq[String], removed: Seq[String],
       stats: Seq[String] = Nil, schemaDdl: Option[String] = None,
       flags: Seq[String] = Nil, blooms: Seq[String] = Nil,
@@ -4827,38 +4595,16 @@ object TimeTravel extends QueryModule {
     val wfeatures = (features ++
       (if (constraints.exists(!_.endsWith("|-")))
         Seq("check-constraints") else Nil)).sorted
+    // optional arrays in their fixed order — the commit JSON's bytes
+    val optional = Seq("stats" -> stats, "flags" -> flags,
+      "features" -> features, "wfeatures" -> wfeatures, "blooms" -> blooms,
+      "ndvs" -> ndvs, "nrows" -> nrows, "constraints" -> constraints,
+      "dvs" -> dvs, "props" -> props, "cdc" -> cdc, "colmap" -> colmap,
+      "txn" -> txn.toSeq, "schemav" -> schemaDdl.toSeq)
     def render(v: Int, ts: Long) =
-      s"""{"version":$v,"ts":["$ts"],""" +
-        s""""added":[${added.map("\"" + jsonEsc(_) + "\"").mkString(",")}],""" +
-        s""""removed":[${removed.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""" +
-        (if (stats.isEmpty) ""
-         else s""","stats":[${stats.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (flags.isEmpty) ""
-         else s""","flags":[${flags.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (features.isEmpty) ""
-         else s""","features":[${features.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (wfeatures.isEmpty) ""
-         else s""","wfeatures":[${wfeatures.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (blooms.isEmpty) ""
-         else s""","blooms":[${blooms.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (ndvs.isEmpty) ""
-         else s""","ndvs":[${ndvs.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (nrows.isEmpty) ""
-         else s""","nrows":[${nrows.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (constraints.isEmpty) ""
-         else s""","constraints":[${constraints.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (dvs.isEmpty) ""
-         else s""","dvs":[${dvs.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (props.isEmpty) ""
-         else s""","props":[${props.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (cdc.isEmpty) ""
-         else s""","cdc":[${cdc.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (colmap.isEmpty) ""
-         else s""","colmap":[${colmap.map("\"" + jsonEsc(_) + "\"").mkString(",")}]""") +
-        (if (txn.isEmpty) ""
-         else s""","txn":["${jsonEsc(txn.get)}"]""") +
-        (if (schemaDdl.isEmpty) "}"
-         else s""","schemav":["${jsonEsc(schemaDdl.get)}"]}""")
+      s"""{"version":$v,"ts":["$ts"],"added":${jsonArr(added)},""" +
+        s""""removed":${jsonArr(removed)}""" +
+        optional.map { case (k, ls) => jsonField(k, ls) }.mkString + "}"
     var v = currentVersion(root) + 1
     var committed = false
     while (!committed) {
@@ -4975,17 +4721,17 @@ object TimeTravel extends QueryModule {
     // AUTO-CHECKPOINT every 10 generations (Delta's checkpointInterval
     // default): without it a one-commit-per-micro-batch table makes
     // every reader fold an ever-growing commit tail — the metadata cost
-    // a 100 TB deployment feels first. Runs OUTSIDE the commit lock
-    // (r19 review: the parquet-format checkpoint is a distributed job —
-    // holding lockFor through it would stall every same-JVM committer
-    // for the job's duration). Safe outside: checkpoint content is a
-    // pure function of the log at version v, so racing committers /
-    // checkpointers produce logically identical state and the dir/file
-    // rename race keeps exactly one. Best-effort: a failed checkpoint
-    // never fails the commit that triggered it.
+    // a 100 TB deployment feels first. Runs OUTSIDE the commit lock: the
+    // parquet-format checkpoint is a distributed job, and holding
+    // lockFor through it would stall every same-JVM committer for the
+    // job's duration. Safe outside: checkpoint content is a pure function
+    // of the log at version v, so racing committers / checkpointers
+    // produce logically identical state and the dir/file rename race
+    // keeps exactly one. Best-effort: a failed checkpoint never fails
+    // the commit that triggered it, and is logged once per root.
     if (v > 0 && v % AutoCheckpointEvery == 0)
       try { checkpoint(root, v); () }
-      catch { case scala.util.control.NonFatal(_) => () }
+      catch { case scala.util.control.NonFatal(e) => warnOnce("auto-checkpoint", root, e) }
     v
   }
 
@@ -5048,9 +4794,6 @@ object TimeTravel extends QueryModule {
     val schemaDdl = schemaAsOf(root, v).map(_.toDDL)
     val featLines = featuresAsOf(root, v).toSeq.sorted
     val wfeatLines = writerFeaturesAsOf(root, v).toSeq.sorted
-    def arr(key: String, ls: Seq[String]): String =
-      if (ls.isEmpty) ""
-      else s""","$key":[${ls.map("\"" + jsonEsc(_) + "\"").mkString(",")}]"""
     val fileLevelCount = files.size + dvLines.size + statLines.size +
       bloomRaw.size + nrowLines.size + ndvRaw.size
     val spark = SparkSession.getActiveSession
@@ -5064,15 +4807,13 @@ object TimeTravel extends QueryModule {
         val ndvLines = ndvRaw.map { case (l, bits) =>
           l + "|" + java.util.Base64.getEncoder.encodeToString(bits) }
         s"""{"version":$v,"files":[${files.map("\"" + _ + "\"").mkString(",")}]""" +
-          arr("features", featLines) + arr("wfeatures", wfeatLines) +
-          arr("dvs", dvLines) + arr("constraints", csLines) +
-          arr("props", prLines) + arr("colmap", cmLines) +
-          arr("stats", statLines) + arr("blooms", bloomLines) +
-          arr("ndvs", ndvLines) +
-          arr("nrows", nrowLines) + arr("txn", txnLines) +
-          (if (schemaDdl.isEmpty) ""
-           else s""","schemav":["${jsonEsc(schemaDdl.get)}"]""") +
-          "}"
+          jsonField("features", featLines) + jsonField("wfeatures", wfeatLines) +
+          jsonField("dvs", dvLines) + jsonField("constraints", csLines) +
+          jsonField("props", prLines) + jsonField("colmap", cmLines) +
+          jsonField("stats", statLines) + jsonField("blooms", bloomLines) +
+          jsonField("ndvs", ndvLines) +
+          jsonField("nrows", nrowLines) + jsonField("txn", txnLines) +
+          jsonField("schemav", schemaDdl.toSeq) + "}"
       } else {
         // PARQUET MULTI-PART checkpoint (Delta's multi-part
         // checkpoints — r18 verdict, the one `weak`): the O(files)
@@ -5126,13 +4867,11 @@ object TimeTravel extends QueryModule {
           if (fs.exists(nested)) fs.delete(nested, true)
         }
         s"""{"version":$v,"format":["parquet"]""" +
-          arr("features", (featLines :+ CkptParquetFeature).sorted) +
-          arr("wfeatures", wfeatLines) +
-          arr("constraints", csLines) + arr("props", prLines) +
-          arr("colmap", cmLines) + arr("txn", txnLines) +
-          (if (schemaDdl.isEmpty) ""
-           else s""","schemav":["${jsonEsc(schemaDdl.get)}"]""") +
-          "}"
+          jsonField("features", (featLines :+ CkptParquetFeature).sorted) +
+          jsonField("wfeatures", wfeatLines) +
+          jsonField("constraints", csLines) + jsonField("props", prLines) +
+          jsonField("colmap", cmLines) + jsonField("txn", txnLines) +
+          jsonField("schemav", schemaDdl.toSeq) + "}"
       }
     val tmp = new org.apache.hadoop.fs.Path(
       s"${logDir(root)}/.ck-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -5411,10 +5150,7 @@ object TimeTravel extends QueryModule {
     val nFiles = litInt(exprs.last, "nFiles")
     maintPlan("zorder", Seq("version", "files_after")) {
       val s = SparkSession.active
-      val v =
-        if (cols.length == 2) compactZOrdered(s, root, cols(0), cols(1),
-          nFiles) // the pinned 2×16-bit interleave (q185's layout)
-        else compactZOrderedN(s, root, cols, nFiles)
+      val v = compactZOrderedN(s, root, cols, nFiles)
       Seq(v.toLong, snapshotFiles(root, v).size.toLong)
     }
   }

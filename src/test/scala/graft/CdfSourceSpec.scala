@@ -361,7 +361,7 @@ class CdfSourceSpec extends SparkSpec {
     TimeTravel.commit(spark, root, base.filter(col("o_orderkey") % 2 === 0))
     TimeTravel.renameColumn(spark, root, "o_totalprice", "price")
     // post-rename append: stored under the ORIGINAL physical name
-    TimeTravel.commitMapped(spark, root, base
+    TimeTravel.commit(spark, root, base
       .filter(col("o_orderkey") % 2 === 1)
       .withColumnRenamed("o_totalprice", "price"))
     val expect = base.agg(

@@ -311,8 +311,8 @@ class LakehouseOpsSpec extends SparkSpec {
     val ordersWide = Tables.table(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_orderpriority", "o_totalprice")
     val zRoot = newRoot()
-    TimeTravel.commitZOrdered(spark, zRoot, ordersWide,
-      "o_orderkey", "o_custkey", 16)
+    TimeTravel.commitZOrderedN(spark, zRoot, ordersWide,
+      Seq("o_orderkey", "o_custkey"), 16)
     val nFiles = filesOf(TimeTravel.readAsOf(spark, zRoot, 0)).size
     assert(nFiles >= 12, s"z-order staged only $nFiles files")
     val mxK = ordersWide.agg(max("o_orderkey")).head().getLong(0)
@@ -341,8 +341,8 @@ class LakehouseOpsSpec extends SparkSpec {
       s"single-column clustering pruned a foreign range ($linCust vs $scanCust)")
     // OPTIMIZE … ZORDER BY re-clusters that table in a nodata commit:
     // rows unchanged, the custkey range now prunes, change feeds skip it
-    val zv = TimeTravel.compactZOrdered(spark, linRoot,
-      "o_orderkey", "o_custkey", 16)
+    val zv = TimeTravel.compactZOrderedN(spark, linRoot,
+      Seq("o_orderkey", "o_custkey"), 16)
     assert(TimeTravel.readAsOf(spark, linRoot, zv).count()
       === ordersWide.count())
     val zCust = filesOf(TimeTravel.readAsOfWhere(spark, linRoot, zv,
@@ -602,7 +602,7 @@ class LakehouseOpsSpec extends SparkSpec {
     val extra = base.limit(50)
       .withColumn("o_orderkey", col("o_orderkey") + 900000000L)
       .withColumnRenamed("o_totalprice", "total_usd")
-    assert(TimeTravel.commitMapped(spark, root, extra) === 2)
+    assert(TimeTravel.commit(spark, root, extra) === 2)
     val newFiles =
       filesOf(TimeTravel.readAsOfMapped(spark, root, 2)) -- physBefore
     assert(newFiles.nonEmpty)
@@ -619,7 +619,7 @@ class LakehouseOpsSpec extends SparkSpec {
     assert(m4.agg(count(col("o_custkey"))).head().getLong(0) === 0L,
       "re-added column resurrected dropped bytes")
     // new appends CAN carry the re-added column; only they show values
-    assert(TimeTravel.commitMapped(spark, root,
+    assert(TimeTravel.commit(spark, root,
       extra.limit(20).withColumn("o_orderkey", col("o_orderkey") + 1000L)
         .withColumn("o_custkey", lit(7L))
         .select("o_orderkey", "o_orderpriority", "total_usd", "o_custkey")) === 5)

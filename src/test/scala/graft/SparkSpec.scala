@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,4 +26,17 @@ object TestSpark {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.Sf
+
+  /** Jobs Spark starts while `body` runs. */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
 }

@@ -1264,7 +1264,8 @@ class TableSourceSpec extends SparkSpec {
     val root = newRoot()
     val base = Tables.table(spark, sf, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice").limit(1024)
-    TimeTravel.commitZOrdered(spark, root, base, "o_orderkey", "o_custkey", 16)
+    TimeTravel.commitZOrderedN(spark, root, base,
+      Seq("o_orderkey", "o_custkey"), 16)
     val nFiles = TimeTravel.snapshotFiles(root, 0).size
     assert(nFiles >= 8, s"z-order produced only $nFiles files")
 

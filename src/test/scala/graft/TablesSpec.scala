@@ -7,8 +7,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** `Tables` resolves a table from one parquet footer read on the driver:
   * the schema must be exactly what Spark's inference reports, resolving
@@ -31,19 +29,6 @@ class TablesSpec extends SparkSpec {
     assert(Tables.footerSchema(spark, path).isDefined, s"no footer schema for $path")
     val inferred = spark.read.parquet(path).schema
     assert(Tables.parquet(spark, path).schema == inferred, path)
-  }
-
-  /** Jobs Spark starts while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusDrain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
   }
 
   private def tempViews: Set[String] =

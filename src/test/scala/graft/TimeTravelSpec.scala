@@ -1286,7 +1286,7 @@ class TimeTravelSpec extends SparkSpec {
       TimeTravel.currentVersion(root2)).toSet
     // a narrow-band append under the LOGICAL schema (top keys only)
     val keyMax = base.agg(max("o_orderkey")).head().getLong(0)
-    TimeTravel.commitMapped(spark, root2,
+    TimeTravel.commit(spark, root2,
       base.filter(col("o_orderkey") > keyMax - 50)
         .select(col("o_orderkey").as("okey"),
           (col("o_totalprice") + 1).as("o_totalprice")))
@@ -1748,7 +1748,7 @@ class TimeTravelSpec extends SparkSpec {
       .forall(f => st.contains((f, "o_orderkey"))), "stats not carried")
     // constraints carried: a violating commit refuses on the CLONE
     intercept[IllegalArgumentException] {
-      TimeTravel.commitMapped(spark, dst,
+      TimeTravel.commit(spark, dst,
         base.limit(1).select(col("o_orderkey"),
           lit(-5.0).as("price")))
     }
