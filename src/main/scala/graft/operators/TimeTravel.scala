@@ -52,26 +52,65 @@ object TimeTravel extends QueryModule {
   private[graft] def dataPath(root: String, f: String): String =
     if (f.startsWith("/") || f.contains("://")) f else s"$root/data/$f"
 
-  /** Per-root JVM lock closing the local check-then-rename window between
-    * same-JVM committers; cross-JVM exclusion is [[claimVersion]]'s
-    * no-replace rename. */
+  /** Per-root JVM lock serializing same-JVM committers' read-validate-
+    * claim sequences; cross-JVM exclusion is [[claimVersion]]'s
+    * no-replace claim. */
   private val rootLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private def lockFor(root: String): Object =
     rootLocks.computeIfAbsent(root, _ => new Object)
 
-  /** All IO goes through the Hadoop `FileSystem` API (the glog r11
-    * lesson): a commit log is only a table format if it works on the
-    * filesystems tables live on — HDFS, object stores via their Hadoop
-    * connectors, or `file:/`. The session's conf propagates fs.*
-    * settings; outside a session (unit paths) defaults apply. */
+  /** The Hadoop conf the table format's IO resolves once per session (the
+    * session's fs.* settings at first use; defaults outside a session),
+    * and the [[LocalFileSystem]] it serves `file:` roots with. */
+  private final class TableIo(val conf: org.apache.hadoop.conf.Configuration) {
+    val local: org.apache.hadoop.fs.FileSystem = {
+      val fs = new LocalFileSystem
+      fs.initialize(java.net.URI.create("file:///"), conf)
+      fs
+    }
+  }
+  private val sessionIo = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TableIo]())
+  private lazy val defaultIo =
+    new TableIo(new org.apache.hadoop.conf.Configuration())
+
+  /** All IO goes through the Hadoop `FileSystem` API: a commit log is
+    * only a table format if it works on the filesystems tables live on —
+    * HDFS, object stores via their Hadoop connectors, or `file:/`.
+    * `file:` paths get the session's [[LocalFileSystem]], which starts no
+    * process; other schemes come from Hadoop's cache under the session's
+    * conf. */
   private def fsFor(path: String): (org.apache.hadoop.fs.FileSystem,
       org.apache.hadoop.fs.Path) = {
-    val conf = SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
+    val io = SparkSession.getActiveSession.fold(defaultIo)(s =>
+      sessionIo.computeIfAbsent(s, _ => new TableIo(s.sessionState.newHadoopConf())))
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(conf), p)
+    val scheme = Option(p.toUri.getScheme).getOrElse(
+      org.apache.hadoop.fs.FileSystem.getDefaultUri(io.conf).getScheme)
+    (if (scheme == "file") io.local else p.getFileSystem(io.conf), p)
+  }
+
+  /** The Hadoop settings that map `file:` to [[LocalFileSystem]] outside
+    * Hadoop's cache, for the table's writes that run in Spark tasks. */
+  private val LocalFsConf = Map(
+    "fs.file.impl" -> classOf[LocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `w` with [[LocalFsConf]] in its Hadoop conf, for this one write only:
+    * Spark's parquet writer tasks and its commit protocol then start no
+    * process either. The session, its conf and the cached filesystems
+    * stay untouched. */
+  private def tableWriter[T](w: org.apache.spark.sql.DataFrameWriter[T])
+      : org.apache.spark.sql.DataFrameWriter[T] = w.options(LocalFsConf)
+
+  /** The session's Hadoop conf plus [[LocalFsConf]], for tasks that write
+    * table files themselves. */
+  private def taskConf(s: SparkSession)
+      : org.apache.spark.util.SerializableConfiguration = {
+    val c = s.sessionState.newHadoopConf()
+    LocalFsConf.foreach { case (k, v) => c.set(k, v) }
+    new org.apache.spark.util.SerializableConfiguration(c)
   }
 
   private def readBytes(fs: org.apache.hadoop.fs.FileSystem,
@@ -525,7 +564,7 @@ object TimeTravel extends QueryModule {
       s"$root/stage-${java.util.UUID.randomUUID()}")
     val (fs, _) = fsFor(root)
     try {
-      partitionBy.fold(df.write)(df.write.partitionBy(_))
+      tableWriter(partitionBy.fold(df.write)(df.write.partitionBy(_)))
         .mode("overwrite").parquet(stage.toString)
       def parts(dir: org.apache.hadoop.fs.Path) =
         fs.listStatus(dir).map(_.getPath)
@@ -596,28 +635,62 @@ object TimeTravel extends QueryModule {
   }
 
   /** The claim primitive: publish `tmp` as `dst` atomically, REFUSING an
-    * existing destination. `FileSystem.rename` is not that primitive
-    * everywhere — LocalFileSystem delegates to POSIX rename(2), which
-    * silently REPLACES the destination, so two racing committers could
-    * both "win" a version and one commit's rows would vanish (ADVICE
-    * r12). `FileContext.rename(…, Options.Rename.NONE)` routes through
-    * `AbstractFileSystem`'s no-replace validation on every filesystem
-    * (atomic on HDFS; check-then-rename on file:/, closed for same-JVM
-    * racers by [[lockFor]]). Returns false when the destination already
-    * exists — the lost-race signal the retry loop consumes. */
+    * existing destination. `FileSystem.rename` is not that primitive:
+    * on `file:` it is POSIX rename(2), which silently REPLACES the
+    * destination, so two racing committers could both "win" a version
+    * and one commit's rows would vanish. On `file:` the claim is a hard
+    * link — link(2) refuses an existing name atomically, across
+    * processes too — after which the `.crc` sidecar moves to the
+    * claimed name and the temp name is deleted. Other schemes, and a
+    * link that fails for any reason but an existing destination, use
+    * `FileContext.rename(…, Options.Rename.NONE)`, the no-replace rename
+    * of `AbstractFileSystem` (atomic on HDFS). Returns false when the
+    * destination already exists — the lost-race signal the retry loop
+    * consumes. */
   private[graft] def claimVersion(fs: org.apache.hadoop.fs.FileSystem,
       tmp: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean =
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        dst.toUri, fs.getConf)
-      fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-      case _: java.nio.file.FileAlreadyExistsException => false
-      case e: java.io.IOException if fs.exists(dst) => false
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    def renameClaim(): Boolean =
+      try {
+        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+          dst.toUri, fs.getConf)
+        fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)
+        true
+      } catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+        case _: java.nio.file.FileAlreadyExistsException => false
+        case e: java.io.IOException if fs.exists(dst) => false
+      }
+    if (fs.getUri.getScheme != "file") renameClaim()
+    else {
+      def local(p: org.apache.hadoop.fs.Path) =
+        java.nio.file.Paths.get(fs.makeQualified(p).toUri)
+      def crc(p: org.apache.hadoop.fs.Path) =
+        local(new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}.crc"))
+      val linked =
+        try { java.nio.file.Files.createLink(local(dst), local(tmp)); Some(true) }
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException => Some(false)
+          case _: java.io.IOException | _: UnsupportedOperationException => None
+        }
+      linked match {
+        case Some(true) =>
+          // the version is claimed: a failed tidy-up must not fail the
+          // commit (vacuum reclaims the temp name)
+          try {
+            if (java.nio.file.Files.exists(crc(tmp)))
+              java.nio.file.Files.move(crc(tmp), crc(dst),
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+            java.nio.file.Files.delete(local(tmp))
+          } catch { case e: java.io.IOException =>
+            warnOnce("claim tidy-up", dst.getParent.toString, e)
+          }
+          true
+        case Some(false) => false
+        case None => renameClaim()
+      }
     }
+  }
 
   /** The DDL epoch a rewrite read at: (column mapping, logical schema
     * DDL) at `gen`. DML verbs capture it at their read generation and
@@ -798,7 +871,13 @@ object TimeTravel extends QueryModule {
     * (r13 ADVICE). Checkpoints written before an array existed simply
     * contribute nothing for it — conservative, never wrong. */
   private def foldCkptTail[T](root: String, gen: Int, key: String,
-      empty: T)(fold: (T, String) => T): T = {
+      empty: T)(fold: (T, String) => T): T =
+    foldCkptTailAt(root, gen, key, empty)(_ => fold)
+
+  /** [[foldCkptTail]] with the fold told which generation — the
+    * checkpoint's or the commit's — each line comes from. */
+  private def foldCkptTailAt[T](root: String, gen: Int, key: String,
+      empty: T)(fold: Int => (T, String) => T): T = {
     val (fs, commits, ckpts) = listLog(root)
     val base = ckpts.filter(_._1 <= gen).lastOption
     val baseV = base.map(_._1).getOrElse(-1)
@@ -813,17 +892,17 @@ object TimeTravel extends QueryModule {
     val baseAcc = base match {
       case Some((bv, f)) =>
         val h = ckptHandle(fs, root, bv, f)
-        if (h.has(key)) h.lines(key).foldLeft(empty)(fold)
+        if (h.has(key)) h.lines(key).foldLeft(empty)(fold(bv))
         else commits.filter(_._1 <= baseV)
-          .foldLeft(empty) { case (acc, (_, cf)) =>
-            parseArr(readBytes(fs, cf), key).foldLeft(acc)(fold)
+          .foldLeft(empty) { case (acc, (cv, cf)) =>
+            parseArr(readBytes(fs, cf), key).foldLeft(acc)(fold(cv))
           }
       case None => empty
     }
     commits
       .filter(c => c._1 > baseV && c._1 <= gen)
-      .foldLeft(baseAcc) { case (acc, (_, f)) =>
-        parseArr(readBytes(fs, f), key).foldLeft(acc)(fold)
+      .foldLeft(baseAcc) { case (acc, (cv, f)) =>
+        parseArr(readBytes(fs, f), key).foldLeft(acc)(fold(cv))
       }
   }
 
@@ -1345,8 +1424,7 @@ object TimeTravel extends QueryModule {
     val dvs = dvsFor(root, gen)
     val oldByFile: Map[String, String] =
       touched.flatMap(f => dvs.get(f).map(f -> _._1)).toMap
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
+    val conf = taskConf(s)
     val dvRoot = dvDir(root)
     val (fs, _) = fsFor(root)
     fs.mkdirs(new org.apache.hadoop.fs.Path(dvRoot))
@@ -1588,8 +1666,7 @@ object TimeTravel extends QueryModule {
       s"time travel: row delta masks files not in snapshot $gen of " +
         s"$root: ${ghosts.mkString(", ")} — re-read and re-plan")
     val dvs = dvsFor(root, gen)
-    val confB = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
+    val confB = taskConf(s)
     val dvRoot = dvDir(root)
     val (fs, _) = fsFor(root)
     fs.mkdirs(new org.apache.hadoop.fs.Path(dvRoot))
@@ -1816,10 +1893,10 @@ object TimeTravel extends QueryModule {
         if (liveGen < 0) None else propsAsOf(root, liveGen).get(IdentityHwmKey)
       val hwm = prevHwm.map(_.toLong).getOrElse(0L)
       val stageDir = s"$root/stage-id-${java.util.UUID.randomUUID().toString.take(8)}"
-      s.read.parquet(cur: _*)
+      tableWriter(s.read.parquet(cur: _*)
         .withColumn(phys,
           (lit(hwm + 1) + monotonically_increasing_id()).cast("long"))
-        .write.mode("overwrite").parquet(stageDir)
+        .write).mode("overwrite").parquet(stageDir)
       cur.foreach(t => fs.delete(new org.apache.hadoop.fs.Path(t), false))
       val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stageDir))
         .map(_.getPath).filter(_.getName.endsWith(".parquet"))
@@ -3238,7 +3315,7 @@ object TimeTravel extends QueryModule {
   private def writeCdcFiles(s: SparkSession, root: String,
       changes: DataFrame): Seq[String] = {
     val stage = s"$root/stage-cdc-${java.util.UUID.randomUUID()}"
-    changes.write.mode("overwrite").parquet(stage)
+    tableWriter(changes.write).mode("overwrite").parquet(stage)
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val (fs, _) = fsFor(root)
     fs.mkdirs(new org.apache.hadoop.fs.Path(cdcDir(root)))
@@ -3839,14 +3916,17 @@ object TimeTravel extends QueryModule {
     * REPLAY an already-committed epoch as a duplicate generation
     * (r13 ADVICE). */
   private[graft] def txnsAsOf(root: String, gen: Int): Map[String, Long] =
-    foldCkptTail(root, gen, "txn", Map.empty[String, Long]) { (m, line) =>
-      line.split('|') match {
-        case Array(a, v) =>
-          try {
-            val ver = v.toLong
-            if (m.get(a).forall(_ < ver)) m.updated(a, ver) else m
-          } catch { case _: NumberFormatException => m }
-        case _ => m
+    foldCkptTailAt(root, gen, "txn", Map.empty[String, Long]) { at => (m, line) =>
+      line.split("\\|", -1) match {
+        case Array(a, v) if v.toLongOption.nonEmpty =>
+          val ver = v.toLong
+          if (m.get(a).forall(_ < ver)) m.updated(a, ver) else m
+        // read as "no entry", a torn line would let commitTxn land an
+        // epoch that is already committed
+        case _ =>
+          throw new IllegalStateException(
+            s"time travel: malformed txn line '$line' in generation $at " +
+              s"of $root — expected '<appId>|<version>'")
       }
     }
 
@@ -3965,8 +4045,7 @@ object TimeTravel extends QueryModule {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dst/data"))
     if (dvs.nonEmpty)
       fs.mkdirs(new org.apache.hadoop.fs.Path(dvDir(dst)))
-    val confB = new org.apache.spark.util.SerializableConfiguration(
-      s.sessionState.newHadoopConf())
+    val confB = taskConf(s)
     val pairs = files.map(f => (dataPath(src, f), s"$dst/data/${ren(f)}")) ++
       dvs.map { case (_, (n, _)) =>
         (s"${dvDir(src)}/$n", s"${dvDir(dst)}/$n") }
@@ -4842,8 +4921,8 @@ object TimeTravel extends QueryModule {
         val df = s.createDataFrame(rows.asJava, CkptPartSchema)
         val tmpDir = new org.apache.hadoop.fs.Path(
           s"${logDir(root)}/.ckp-${java.util.UUID.randomUUID().toString.take(8)}")
-        df.repartitionByRange(nParts, col("k"), col("line"))
-          .write.mode("overwrite").parquet(tmpDir.toString)
+        tableWriter(df.repartitionByRange(nParts, col("k"), col("line")).write)
+          .mode("overwrite").parquet(tmpDir.toString)
         val partsDest =
           new org.apache.hadoop.fs.Path(ckptPartsDir(root, v))
         // parts land BEFORE the manifest (a manifest must never point
@@ -5280,7 +5359,8 @@ object TimeTravel extends QueryModule {
   }
 
   /** Delete data files referenced by NO commit (abandoned stages, orphans
-    * planted outside the protocol). Files of superseded generations stay —
+    * planted outside the protocol) and the log's temp names a writer died
+    * holding. Files of superseded generations stay —
     * they back AS-OF reads; retiring history would be a log truncation,
     * a policy this library leaves to the caller. */
   def vacuum(root: String): Seq[String] = vacuum(root, 0L)
@@ -5313,11 +5393,11 @@ object TimeTravel extends QueryModule {
         .foreachPartition { it =>
           it.foreach { p0 =>
             val p = new org.apache.hadoop.fs.Path(p0)
-            p.getFileSystem(conf.value).delete(p, false)
+            p.getFileSystem(conf.value).delete(p, true)
             ()
           }
         }
-    } else victims.foreach(p => fs.delete(p, false))
+    } else victims.foreach(p => fs.delete(p, true))
     victims.map(_.getName).sorted
   }
 
@@ -5333,7 +5413,8 @@ object TimeTravel extends QueryModule {
     vacuumCandidates(root, graceMs)._2.map(_.getName).sorted
 
   /** The shared planning half of [[vacuum]]/[[vacuumDryRun]]: every
-    * unreferenced, grace-aged data and change file. referenced = every
+    * unreferenced, grace-aged data and change file, and every grace-aged
+    * temp name in the log. referenced = every
     * surviving commit's adds PLUS every checkpoint's resolved file
     * list — after history expiry the oldest surviving snapshot is
     * backed by a checkpoint, not by the deleted commits — PLUS every
@@ -5371,8 +5452,17 @@ object TimeTravel extends QueryModule {
     val cdcGone = (if (fs.exists(cd)) fs.listStatus(cd).toSeq else Seq.empty)
       .filter(st => st.isFile && !cdcRef(st.getPath.getName) && aged(st))
       .map(_.getPath)
-    (fs, dataGone ++ cdcGone)
+    // temp names a writer died holding between writing and claiming:
+    // commit, branch-commit and checkpoint files and checkpoint-parts
+    // directories (deleting one drops its `.crc` sidecars too)
+    val ld = new org.apache.hadoop.fs.Path(logDir(root))
+    val logGone = (if (fs.exists(ld)) fs.listStatus(ld).toSeq else Seq.empty)
+      .filter(st => LogTempName.matches(st.getPath.getName) && aged(st))
+      .map(_.getPath)
+    (fs, dataGone ++ cdcGone ++ logGone)
   }
+
+  private val LogTempName = """\.(c|b|ck|ckp)-[^/]*""".r
 
   /** History RETENTION: delete commit files below `keepFrom` (and
     * checkpoints no surviving resolution needs). Legal only when an

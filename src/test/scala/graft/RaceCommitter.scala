@@ -1,14 +1,13 @@
 package graft
 
-/** Child-JVM main for the CROSS-PROCESS commit-race spec (r15 verdict
-  * #5): a second, genuinely separate JVM racing `INSERT INTO` the same
-  * catalog table as the spec's own session — the in-process
-  * `lockFor(root)` mutex cannot serialize these two committers, so the
-  * run exercises the claim protocol's real cross-process primitive
-  * (`FileContext.rename(…, Options.Rename.NONE)`). After its inserts it
-  * COMPACTS the table, retiring every file the parent captured before
-  * the spawn — the parent's later stale remove-commit must then surface
-  * the explicit conflict error.
+/** Child-JVM main for the cross-process commit-race spec: a second,
+  * separate JVM racing `INSERT INTO` the same catalog table as the
+  * spec's own session. The in-process `lockFor(root)` mutex cannot
+  * serialize these two committers, so the run exercises the claim's
+  * cross-process primitive, a hard link that refuses an existing commit
+  * file on `file:/`. After its inserts it COMPACTS the table, retiring
+  * every file the parent captured before the spawn — the parent's later
+  * stale remove-commit must then surface the explicit conflict error.
   *
   * args: warehouse, tableName, tag, nInserts */
 object RaceCommitter {

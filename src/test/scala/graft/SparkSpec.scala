@@ -39,4 +39,20 @@ trait SparkSpec extends AnyFunSuite {
     try { body; ListenerBusDrain(sc); jobs.get }
     finally sc.removeSparkListener(listener)
   }
+
+  /** Child processes this JVM starts while `body` runs, counted from the
+    * `jdk.ProcessStart` events of an in-process flight recording. */
+  def processStartsDuring(body: => Unit): Int = {
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val out = java.nio.file.Files.createTempFile("graft_procs_", ".jfr")
+    try {
+      rec.start()
+      try body finally rec.stop()
+      rec.dump(out)
+      import scala.jdk.CollectionConverters._
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala
+        .count(_.getEventType.getName == "jdk.ProcessStart")
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(out) }
+  }
 }

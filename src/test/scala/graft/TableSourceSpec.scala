@@ -2175,8 +2175,8 @@ class TableSourceSpec extends SparkSpec {
 
   test("cross-process commit race: a second JVM's INSERTs interleave losslessly; its compaction conflicts a stale remove (r15 verdict #5)") {
     // the in-JVM lock cannot serialize another process — this drives the
-    // claim protocol's REAL cross-process primitive (FileContext rename
-    // with Options.Rename.NONE) through a genuinely separate JVM
+    // claim protocol's cross-process primitive (a hard link on file:/)
+    // through a genuinely separate JVM
     val cp = System.getProperty("java.class.path")
     assume(cp != null && cp.contains("test-classes"),
       "forked-test classpath unavailable; cannot spawn the child JVM")

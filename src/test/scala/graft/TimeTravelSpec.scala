@@ -131,9 +131,9 @@ class TimeTravelSpec extends SparkSpec {
   }
 
   test("the version claim refuses an existing destination on file:/ (no silent replace)") {
-    // ADVICE r12: LocalFileSystem's rename delegates to POSIX rename(2),
-    // which REPLACES an existing destination — the claim must go through
-    // a primitive that refuses instead (FileContext + Options.Rename.NONE).
+    // LocalFileSystem's rename delegates to POSIX rename(2), which
+    // REPLACES an existing destination — the claim goes through a
+    // primitive that refuses instead (a hard link on file:/).
     val dir = java.nio.file.Files.createTempDirectory("graft_ttl_claim_")
     val fs = new org.apache.hadoop.fs.Path(dir.toString)
       .getFileSystem(new org.apache.hadoop.conf.Configuration())
