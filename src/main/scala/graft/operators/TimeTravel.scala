@@ -138,11 +138,24 @@ object TimeTravel extends QueryModule {
     * checkpoint in the committing writer (Delta's checkpointInterval). */
   val AutoCheckpointEvery = 10
 
+  /** `_graft_log` listings and commit-file reads made in this JVM — the
+    * metadata cost of a call, as specs observe it. */
+  private[graft] val logListings = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val commitReads = new java.util.concurrent.atomic.AtomicLong
+
+  /** The text of the commit file `f`. */
+  private def commitText(fs: org.apache.hadoop.fs.FileSystem,
+      f: org.apache.hadoop.fs.Path): String = {
+    commitReads.incrementAndGet()
+    readBytes(fs, f)
+  }
+
   /** Log-dir listing by NAME only — version discovery costs a listing,
     * never a content read. Returns (commits, checkpoints), each sorted. */
   private def listLog(root: String): (org.apache.hadoop.fs.FileSystem,
       Seq[(Int, org.apache.hadoop.fs.Path)],
       Seq[(Int, org.apache.hadoop.fs.Path)]) = {
+    logListings.incrementAndGet()
     val (fs, d) = fsFor(logDir(root))
     val names =
       if (!fs.exists(d)) Array.empty[org.apache.hadoop.fs.Path]
@@ -193,12 +206,6 @@ object TimeTravel extends QueryModule {
       j += 1
     }
     out.toSeq
-  }
-
-  private def readCommit(fs: org.apache.hadoop.fs.FileSystem,
-      f: org.apache.hadoop.fs.Path): (Seq[String], Seq[String]) = {
-    val txt = readBytes(fs, f)
-    (parseArr(txt, "added"), parseArr(txt, "removed"))
   }
 
   // ---- checkpoint format (r19: multi-part parquet + cached heads) ----
@@ -348,6 +355,226 @@ object TimeTravel extends QueryModule {
     }
   }
 
+  /** One resolution of generation `gen` of `root`: one listing of
+    * `_graft_log`, the newest checkpoint ≤ gen as the base, and each
+    * commit file read at most once. Every per-version reader is a view
+    * over it, so a caller that needs several answers about one version
+    * takes one snapshot. Every key folds lazily — a parquet
+    * checkpoint's file-level key is scanned only when its fold is asked
+    * for. A snapshot lives for one call chain; nothing is cached across
+    * calls. [[at]] re-bases the same listing and commit texts on
+    * another generation. */
+  private[graft] final class Snapshot(val root: String,
+      val fs: org.apache.hadoop.fs.FileSystem,
+      val commits: Seq[(Int, org.apache.hadoop.fs.Path)],
+      val ckpts: Seq[(Int, org.apache.hadoop.fs.Path)], val gen: Int,
+      texts: java.util.concurrent.ConcurrentHashMap[Integer, String]) {
+    private val base = ckpts.filter(_._1 <= gen).lastOption
+    private val baseV = base.fold(-1)(_._1)
+    private lazy val ckpt =
+      base.map { case (v, f) => ckptHandle(fs, root, v, f) }
+    /** The tail commits (base, gen] the fold reads past the checkpoint. */
+    val tail: Seq[(Int, org.apache.hadoop.fs.Path)] =
+      commits.filter(c => c._1 > baseV && c._1 <= gen)
+
+    def at(g: Int): Snapshot =
+      if (g == gen) this else new Snapshot(root, fs, commits, ckpts, g, texts)
+
+    def text(v: Int, f: org.apache.hadoop.fs.Path): String =
+      texts.computeIfAbsent(v, _ => commitText(fs, f))
+
+    /** `key`'s lines, each with the generation it comes from: the
+      * checkpoint's resolved lines, then the tail commits'. A checkpoint
+      * written before `key` existed carries no such array and must not
+      * shadow the commits below it (a lost txn record would let a
+      * restarted streaming writer replay a committed epoch), so those
+      * commits back-fill it. */
+    def lines(key: String): Seq[(Int, String)] = {
+      def of(cs: Seq[(Int, org.apache.hadoop.fs.Path)]) =
+        cs.flatMap { case (v, f) => parseArr(text(v, f), key).map(v -> _) }
+      (ckpt match {
+        case Some(h) if h.has(key) => h.lines(key).map(baseV -> _)
+        case Some(_) => of(commits.filter(_._1 <= baseV))
+        case None => Nil
+      }) ++ of(tail)
+    }
+
+    private def fold[T](key: String, empty: T)(f: (T, String) => T): T =
+      lines(key).foldLeft(empty) { case (acc, (_, l)) => f(acc, l) }
+
+    /** A line no reader may skip, refused loudly. */
+    private def torn(key: String, at: Int, line: String, want: String) =
+      new IllegalStateException(s"time travel: malformed $key line " +
+        s"'$line' in generation $at of $root — expected '$want'")
+
+    /** The file set — the one fold that passes every tail commit through
+      * the reader-feature gate. */
+    lazy val files: Seq[String] = {
+      require(commits.exists(_._1 == gen),
+        s"time travel: generation $gen does not exist under $root " +
+          s"(latest: ${commits.lastOption.map(_._1).getOrElse(-1)})")
+      tail.foldLeft(ckpt.fold(Seq.empty[String])(_.lines("files"))) {
+        case (acc, (v, f)) =>
+          val txt = text(v, f)
+          requireFeaturesReadable(txt, s"commit $v of $root")
+          val rm = parseArr(txt, "removed").toSet
+          acc.filterNot(rm) ++ parseArr(txt, "added")
+      }
+    }
+
+    /** Reader features required at `gen`, cumulative. */
+    lazy val features: Set[String] = lines("features").map(_._2).toSet
+    lazy val writerFeatures: Set[String] = lines("wfeatures").map(_._2).toSet
+
+    /** `key|value` lines, last write per key winning. */
+    lazy val props: Map[String, String] = fold("props", Map.empty[String, String]) {
+      (m, line) =>
+        val i = line.indexOf('|')
+        if (i < 0) m else m.updated(line.substring(0, i), line.substring(i + 1))
+    }
+
+    private def propsUnder(prefix: String) = props.collect {
+      case (k, v) if k.startsWith(prefix) && v.nonEmpty => k.stripPrefix(prefix) -> v
+    }
+    lazy val cdf: Boolean = props.get("graft.enableChangeDataFeed").contains("true")
+    /** Rendered column defaults keyed by PHYSICAL name, the
+      * `graft.default.<phys>` properties [[addColumnMapped]] records. */
+    lazy val defaults: Map[String, String] = propsUnder("graft.default.")
+    /** PHYSICAL names of type-widened columns — the footer-aggregate
+      * refusal set (old footers' statistics are narrow-typed). */
+    lazy val widened: Set[String] = propsUnder("graft.widened.").keySet
+    lazy val tags: Map[String, Int] = propsUnder("graft.tag.").map(e => e._1 -> e._2.toInt)
+    lazy val branches: Map[String, Int] =
+      propsUnder("graft.branch.").map(e => e._1 -> e._2.toInt)
+
+    /** (name, sql) pairs; a re-add under the same name replaces, the
+      * clear marker (`name|-`) drops. */
+    lazy val constraints: Seq[(String, String)] =
+      fold("constraints", Vector.empty[(String, String)]) { (acc, line) =>
+        val i = line.indexOf('|') // the expr may itself contain '|' (OR)
+        if (i < 0) acc
+        else {
+          val (n, e) = (line.substring(0, i), line.substring(i + 1))
+          if (e == "-") acc.filterNot(_._1 == n)
+          else acc.filterNot(_._1 == n) :+ ((n, e))
+        }
+      }
+
+    /** `logical|physical` lines, `logical|-` clearing one. */
+    lazy val colmap: Map[String, String] = fold("colmap", Map.empty[String, String]) {
+      (m, line) => line.split('|') match {
+        case Array(l, "-") => m - l
+        case Array(l, p) => m.updated(l, p)
+        case _ => m
+      }
+    }
+
+    /** file → (sidecar name, cardinality); the clear marker (`file|-|0`,
+      * written by restore) drops one. */
+    lazy val dvs: Map[String, (String, Long)] =
+      lines("dvs").foldLeft(Map.empty[String, (String, Long)]) { case (m, (at, line)) =>
+        line.split('|') match {
+          case Array(fn, "-", _) => m - fn
+          case Array(fn, dv, card) if card.toLongOption.nonEmpty =>
+            m.updated(fn, (dv, card.toLong))
+          // read as "no vector", a torn line would resurrect masked rows
+          case _ => throw torn("dvs", at, line, "<file>|<vector>|<cardinality>")
+        }
+      }
+
+    /** The newest logged schema: the tail's newest, else the
+      * checkpoint's, else the commits' below it. */
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      lines("schemav").lastOption.map(l =>
+        org.apache.spark.sql.types.StructType.fromDDL(l._2))
+
+    /** Per-file (col, min, max) of long-valued columns. */
+    lazy val stats: Map[(String, String), (Long, Long)] =
+      fold("stats", Map.empty[(String, String), (Long, Long)]) { (m, line) =>
+        line.split('|') match {
+          case Array(name, c, lo, hi) =>
+            try m.updated((name, c), (lo.toLong, hi.toLong))
+            catch { case _: NumberFormatException => m }
+          case _ => m
+        }
+      }
+
+    /** The TAGGED value lines in log order: ((file, col), (tag, value))
+      * for identity `=`, generated `~month`/`~day`/`~year` and
+      * `#bucket:n` lines. Plain min/max lines never collide: their third
+      * field is a number, not a tag. */
+    private lazy val tagged: Seq[((String, String), (String, String))] =
+      lines("stats").flatMap(_._2.split('|') match {
+        case Array(name, c, tag, v)
+            if tag == "=" || tag.startsWith("~") || tag.startsWith("#bucket:") =>
+          Some(((name, c), (tag, v)))
+        case _ => None
+      })
+    lazy val tvals: Map[(String, String), (String, String)] = tagged.toMap
+    private def valsTagged(tag: String) = tagged.collect {
+      case ((f, c), (`tag`, v)) => f -> ((c, v))
+    }.toMap
+    lazy val pvals: Map[String, (String, String)] = valsTagged("=")
+    /** The generated `~month` values [[commitPartitionedGeneratedMonth]]
+      * records. */
+    lazy val gvals: Map[String, (String, String)] = valsTagged("~month")
+
+    /** appId → newest txn version. */
+    lazy val txns: Map[String, Long] =
+      lines("txn").foldLeft(Map.empty[String, Long]) { case (m, (at, line)) =>
+        line.split("\\|", -1) match {
+          case Array(a, v) if v.toLongOption.nonEmpty =>
+            val ver = v.toLong
+            if (m.get(a).forall(_ < ver)) m.updated(a, ver) else m
+          // read as "no entry", a torn line would let commitTxn land an
+          // epoch that is already committed
+          case _ => throw torn("txn", at, line, "<appId>|<version>")
+        }
+      }
+
+    lazy val nrows: Map[String, Long] =
+      lines("nrows").foldLeft(Map.empty[String, Long]) { case (m, (at, line)) =>
+        line.split('|') match {
+          case Array(name, n) if n.toLongOption.nonEmpty => m.updated(name, n.toLong)
+          case _ => throw torn("nrows", at, line, "<file>|<rows>")
+        }
+      }
+
+    lazy val blooms: Map[String, (String, Int, Int, Array[Byte])] =
+      fold("blooms", Map.empty[String, (String, Int, Int, Array[Byte])]) { (acc, line) =>
+        line.split('|') match {
+          case Array(name, c, m, k, b64) =>
+            try acc.updated(name, (c, m.toInt, k.toInt,
+              java.util.Base64.getDecoder.decode(b64)))
+            catch { case _: IllegalArgumentException => acc }
+          case _ => acc
+        }
+      }
+
+    lazy val ndvs: Map[(String, String), String] =
+      fold("ndvs", Map.empty[(String, String), String]) { (m, line) =>
+        line.split('|') match {
+          case Array(f, c, b64) => m.updated((f, c), b64)
+          case _ => m
+        }
+      }
+  }
+
+  /** Resolve generation `gen` of `root`. */
+  private[graft] def snapshot(root: String, gen: Int): Snapshot =
+    resolve(root, _ => gen)
+
+  /** Resolve the latest generation of `root` (-1 when it has none). */
+  private[graft] def latest(root: String): Snapshot =
+    resolve(root, _.lastOption.fold(-1)(_._1))
+
+  private def resolve(root: String,
+      gen: Seq[(Int, org.apache.hadoop.fs.Path)] => Int): Snapshot = {
+    val (fs, commits, ckpts) = listLog(root)
+    new Snapshot(root, fs, commits, ckpts, gen(commits),
+      new java.util.concurrent.ConcurrentHashMap[Integer, String]())
+  }
+
   /** READER FEATURES this build can honor (Delta's protocol
     * readerFeatures): a commit (or checkpoint) that introduces one of
     * these behaviors RECORDS it, and [[requireFeaturesReadable]] makes
@@ -371,22 +598,11 @@ object TimeTravel extends QueryModule {
     Set("deletion-vectors", "column-mapping", "type-widening",
       "column-defaults", "check-constraints")
 
-  /** The writer features REQUIRED at the current generation of `root`,
-    * cumulative like [[featuresAsOf]]: newest checkpoint ≤ gen as the
-    * base, tail commits union in — checkpoint-folded so retention
-    * cannot drop the only commit that recorded one. */
-  private[graft] def writerFeaturesAsOf(root: String, gen: Int): Set[String] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    val baseF = base
-      .map { case (v, f) => ckptHandle(fs, root, v, f).lines("wfeatures").toSet }
-      .getOrElse(Set.empty[String])
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseF) { case (acc, (_, f)) =>
-        acc ++ parseArr(readBytes(fs, f), "wfeatures")
-      }
-  }
+  /** The writer features REQUIRED at `gen`, cumulative like
+    * [[featuresAsOf]] — checkpoint-folded so retention cannot drop the
+    * only commit that recorded one. */
+  private[graft] def writerFeaturesAsOf(root: String, gen: Int): Set[String] =
+    snapshot(root, gen).writerFeatures
 
   /** The WRITE-path protocol gate: refuse when `root` requires a writer
     * feature this build does not implement. The UNBYPASSABLE check
@@ -395,19 +611,16 @@ object TimeTravel extends QueryModule {
     * BEFORE writing anything through [[writePrologue]], and the
     * row-level DML / maintenance verbs before their heavy reads — a
     * refusal never costs a full-dataset stage write.
-    * One resolution (listing + checkpoint/tail fold) per call, the
-    * same cost class as the other per-commit folds. Old logs carry no
-    * array and pass free. */
+    * Old logs carry no array and pass free. */
   private[graft] def requireFeaturesWritable(root: String): Unit =
-    requireFeaturesWritableAt(root, currentVersion(root))
+    requireWritable(latest(root))
 
-  private def requireFeaturesWritableAt(root: String, gen: Int): Unit = {
-    if (gen < 0) return
+  private def requireWritable(snap: Snapshot): Unit = {
     val unknown =
-      (writerFeaturesAsOf(root, gen) -- SupportedWriterFeatures).toSeq.sorted
+      (snap.writerFeatures -- SupportedWriterFeatures).toSeq.sorted
     if (unknown.nonEmpty)
       throw new UnsupportedOperationException(
-        s"time travel: writing to $root requires writer features " +
+        s"time travel: writing to ${snap.root} requires writer features " +
           s"${unknown.mkString(", ")} this build does not support — " +
           "upgrade the writer; refusing to corrupt the table (reads " +
           "are unaffected)")
@@ -431,48 +644,43 @@ object TimeTravel extends QueryModule {
           "upgrade the reader; refusing to misread the table")
   }
 
+  /** The commits of (fromGen, snap.gen] that change rows, each parsed
+    * once: (version, added, removed, dvs, cdc); `nodata`-flagged
+    * commits (compaction — Delta's dataChange=false) are skipped. The
+    * gate is CUMULATIVE first — a feature recorded at or before fromGen
+    * still governs the range's files (column mapping names them
+    * physically), so the range must refuse where a snapshot read of the
+    * same table does — then per commit. Shared by every change-feed
+    * reader: only the RANGE's commit files are read, never the whole log. */
+  private def changeRange(snap: Snapshot, fromGen: Int, what: String)
+      : Seq[(Int, Seq[String], Seq[String], Seq[String], Seq[String])] = {
+    requireFeatureSetReadable(snap.features, what)
+    snap.commits.filter(c => c._1 > fromGen && c._1 <= snap.gen)
+      .map { case (v, f) =>
+        val txt = snap.text(v, f)
+        requireFeaturesReadable(txt, s"commit $v of ${snap.root}")
+        (v, parseArr(txt, "flags"), parseArr(txt, "added"),
+          parseArr(txt, "removed"), parseArr(txt, "dvs"), parseArr(txt, "cdc"))
+      }
+      .collect { case (v, fl, a, r, d, c) if !fl.contains("nodata") => (v, a, r, d, c) }
+  }
+
   /** The change-feed delta of commits (fromGen, toGen]: the data files
-    * whose rows were ADDED in the range. `nodata`-flagged commits
-    * (compaction — Delta's dataChange=false) are skipped wholesale; any
-    * other remove-commit in the range is rewritten history and fails
-    * loudly. Shared by [[readChangesSince]] and the streaming change-feed
-    * source — reads only the RANGE's commit files, never the whole log. */
+    * whose rows were ADDED in the range. Any remove or deletion-vector
+    * commit in the range is rewritten history and fails loudly. Shared
+    * by [[readChangesSince]] and the streaming change-feed source. */
   private[graft] def changeFiles(root: String, fromGen: Int, toGen: Int)
       : Seq[String] = {
-    // CUMULATIVE gate (r17 ADVICE): a feature recorded by a commit at or
-    // before fromGen still governs the range's data files (e.g. column
-    // mapping names them physically) — the per-commit arrays in range
-    // alone would let an uninformed reader through where a snapshot read
-    // of the same table refuses via the checkpoint fold.
-    requireFeatureSetReadable(featuresAsOf(root, toGen),
+    val range = changeRange(snapshot(root, toGen), fromGen,
       s"change feed ($fromGen, $toGen] of $root")
-    val (fs, commits, _) = listLog(root)
-    val range = commits.filter(c => c._1 > fromGen && c._1 <= toGen)
-      .map { case (v, f) =>
-        val txt = readBytes(fs, f)
-        requireFeaturesReadable(txt, s"commit $v of $root")
-        (v, parseArr(txt, "added"), parseArr(txt, "removed"),
-          parseArr(txt, "flags"), parseArr(txt, "dvs"))
-      }
-      .filterNot(_._4.contains("nodata"))
     require(range.forall(_._3.isEmpty),
       s"time travel: range ($fromGen, $toGen] contains remove-commits — " +
         "file-level change reads are append-only; diff snapshots instead")
-    require(range.forall(_._5.isEmpty),
+    require(range.forall(_._4.isEmpty),
       s"time travel: range ($fromGen, $toGen] contains deletion-vector " +
         "commits — a row delete is rewritten history to an append-only " +
         "change consumer; diff snapshots instead")
     range.flatMap(_._2)
-  }
-
-  /** Parsed commit log: version → (added, removed), file names relative
-    * to `<root>/data` — reads EVERY commit; resolution paths use
-    * `resolveSnapshot`, which reads only a checkpoint + its tail. */
-  private def readLog(root: String): Seq[(Int, Seq[String], Seq[String])] = {
-    val (fs, commits, _) = listLog(root)
-    commits.map { case (v, f) =>
-      val (a, r) = readCommit(fs, f); (v, a, r)
-    }
   }
 
   /** Latest committed generation, -1 when the table does not exist yet.
@@ -490,8 +698,13 @@ object TimeTravel extends QueryModule {
     * byte-compatible. Returns the version the commit landed as. */
   def commit(s: SparkSession, root: String, df: DataFrame,
       removed: Seq[String] = Nil, flags: Seq[String] = Nil,
-      txn: Option[String] = None): Int = {
-    val (_, phys) = writePrologue(s, root, df)
+      txn: Option[String] = None): Int =
+    commitAt(s, latest(root), df, removed, flags, txn)
+
+  /** [[commit]] planned against `snap`, the latest generation. */
+  private def commitAt(s: SparkSession, snap: Snapshot, df: DataFrame,
+      removed: Seq[String], flags: Seq[String], txn: Option[String]): Int = {
+    val (_, phys) = writePrologue(s, snap, df)
     // Optimistic concurrency: claim version N with an atomically-refusing
     // rename (claimVersion); the loser of a race re-reads the log and
     // retries at N+1 — data files are immutable, so the retry is
@@ -501,38 +714,34 @@ object TimeTravel extends QueryModule {
     // compactions), blind-landing a second remove would corrupt the log —
     // that is a logical conflict, reported loudly for the caller to
     // re-plan, never retried past. (Shared claim loop: commitNames.)
-    commitNames(s, root, stageFiles(s, root, phys).map(_.name), removed,
-      schemaDdl = Some(df.schema.toDDL), flags = flags, txn = txn)
+    commitNames(s, snap.root, stageFiles(s, snap.root, phys).map(_.name),
+      removed, schemaDdl = Some(df.schema.toDDL), flags = flags, txn = txn)
   }
 
   /** The checks every library write verb runs before it stages, against
-    * ONE resolution of the current generation (one listing, one props
-    * fold): the writer-feature gate, CHECK constraints and schema
-    * enforcement on the logical frame, the identity guard, then the
-    * translation to physical names. Identity tables take their ids from
-    * the catalog INSERT/epoch path's fill — a direct append would land
-    * `df`'s values verbatim, outside the high-water mark — so it refuses
-    * as `what`. DML and maintenance callers re-stage EXISTING ids and
-    * hand `ddlExpect`, their read epoch: they skip the guard and stage
-    * under THAT mapping — resolving it here would silently adopt an
-    * interleaved RENAME's mapping for rows read under the old names;
-    * [[commitNames]] re-verifies the epoch inside the lock. Everyone
-    * else stages under `colmapAt(current generation)`: the table's own
-    * mapping, or a branch's base-first merge. Returns the mapping and
-    * the physical frame. */
-  private def writePrologue(s: SparkSession, root: String, df: DataFrame,
+    * ONE resolution of the current generation, `snap`: the writer-feature
+    * gate, CHECK constraints and schema enforcement on the logical frame,
+    * the identity guard, then the translation to physical names. Identity
+    * tables take their ids from the catalog INSERT/epoch path's fill — a
+    * direct append would land `df`'s values verbatim, outside the
+    * high-water mark — so it refuses as `what`. DML and maintenance
+    * callers re-stage EXISTING ids and hand `ddlExpect`, their read
+    * epoch: they skip the guard and stage under THAT mapping — resolving
+    * it here would silently adopt an interleaved RENAME's mapping for
+    * rows read under the old names; [[commitNames]] re-verifies the epoch
+    * inside the lock. Everyone else stages under `colmapAt(snap)`: the
+    * table's own mapping, or a branch's base-first merge. Returns the
+    * mapping and the physical frame. */
+  private def writePrologue(s: SparkSession, snap: Snapshot, df: DataFrame,
       ddlExpect: Option[(Map[String, String], Option[String])] = None,
       what: String = "library appends",
-      colmapAt: Option[Int => Map[String, String]] = None)
+      colmapAt: Option[Snapshot => Map[String, String]] = None)
       : (Map[String, String], DataFrame) = {
-    val gen = currentVersion(root)
-    val props = if (gen < 0) Map.empty[String, String] else propsAsOf(root, gen)
-    requireFeaturesWritableAt(root, gen)
-    validateConstraintsAt(root, gen, df)
-    validateSchemaAt(root, gen, props, df.schema)
-    if (ddlExpect.isEmpty) requireNotIdentityIn(root, props, what)
-    val cm = ddlExpect.map(_._1).getOrElse(colmapAt.fold(
-      if (gen < 0) Map.empty[String, String] else colmapAsOf(root, gen))(_(gen)))
+    requireWritable(snap)
+    validateConstraintsIn(snap, df)
+    validateSchemaIn(snap, df.schema)
+    if (ddlExpect.isEmpty) requireNotIdentityIn(snap.root, snap.props, what)
+    val cm = ddlExpect.map(_._1).getOrElse(colmapAt.fold(snap.colmap)(_(snap)))
     (cm, toPhysicalFrameCm(cm, df))
   }
 
@@ -701,8 +910,11 @@ object TimeTravel extends QueryModule {
     * of silently staging stale names. */
   private[graft] def ddlEpoch(root: String, gen: Int)
       : (Map[String, String], Option[String]) =
-    (if (gen < 0) Map.empty[String, String] else colmapAsOf(root, gen),
-     if (gen < 0) None else schemaAsOf(root, gen).map(_.toDDL))
+    ddlEpochOf(snapshot(root, gen))
+
+  private def ddlEpochOf(snap: Snapshot)
+      : (Map[String, String], Option[String]) =
+    (snap.colmap, snap.schema.map(_.toDDL))
 
   /** Commit `df` BUCKETED by `keyCol` into `nBuckets` hash buckets, one
     * parquet file per bucket, the bucket id encoded in the FILE NAME
@@ -716,7 +928,7 @@ object TimeTravel extends QueryModule {
       dvExpect: Option[Map[String, Option[String]]] = None,
       ddlExpect: Option[(Map[String, String], Option[String])] = None)
       : Int = {
-    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    val (cm, phys) = writePrologue(s, latest(root), df, ddlExpect)
     // bucket ids ride file names, so only the hash input column needs
     // translating, and it hashes the same VALUES under either name
     val staged = stageFiles(s, root,
@@ -750,7 +962,7 @@ object TimeTravel extends QueryModule {
       dvExpect: Option[Map[String, Option[String]]] = None,
       ddlExpect: Option[(Map[String, String], Option[String])] = None)
       : Int = {
-    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    val (cm, phys) = writePrologue(s, latest(root), df, ddlExpect)
     val sortCol = cm.getOrElse(lSortCol, lSortCol)
     val staged = stageFiles(s, root,
       phys.repartitionByRange(nFiles, col(sortCol))
@@ -789,7 +1001,7 @@ object TimeTravel extends QueryModule {
       s"time travel: z-order takes 2–4 columns, got $n")
     require(nFiles > 0 && (nFiles & (nFiles - 1)) == 0,
       s"time travel: z-order nFiles must be a power of two, got $nFiles")
-    val (cm, phys) = writePrologue(s, root, df, ddlExpect)
+    val (cm, phys) = writePrologue(s, latest(root), df, ddlExpect)
     val cols = lcols.map(c => cm.getOrElse(c, c))
     val prefixBits = java.lang.Integer.numberOfTrailingZeros(nFiles)
     require(prefixBits <= 16 * n,
@@ -845,65 +1057,15 @@ object TimeTravel extends QueryModule {
     * asserts the scanned file set). */
   def readAsOfWhere(s: SparkSession, root: String, gen: Int,
       statCol: String, lo: Long, hi: Long): DataFrame = {
-    val files = snapshotFiles(root, gen)
-    val stats = statsFor(root, gen)
-    val kept = files.filter { f =>
-      stats.get((f, statCol)) match {
-        case Some((fLo, fHi)) => fHi >= lo && fLo <= hi
-        case None => true // no stats for this file/column: cannot skip
-      }
-    }
+    val snap = snapshot(root, gen)
+    val kept = touchedIn(snap, statCol, lo, hi)
     // explicit-schema read (defaults filled, widened files up-convert);
     // the frame carries physical names — statCol arrives physical like
     // every stats-keyed band argument
     val base =
-      if (kept.isEmpty)
-        readFilesFilledDvs(s, root, gen, snapshotFiles(root, gen)).limit(0)
-      else readFilesFilledDvs(s, root, gen, kept)
+      if (kept.isEmpty) readFilesFilledDvsIn(s, snap, snap.files).limit(0)
+      else readFilesFilledDvsIn(s, snap, kept)
     base.filter(col(statCol) >= lo && col(statCol) <= hi)
-  }
-
-  /** Fold the `key` array lines of the newest checkpoint ≤ `gen` (the
-    * base) plus the tail commits (ckpt, gen] — the shared resolution
-    * shape of every per-file metadata reader, so retention
-    * ([[expireHistory]]) never silently degrades stats/bloom/nrows
-    * pruning or txn idempotence: checkpoints carry the RESOLVED state
-    * (r13 ADVICE). Checkpoints written before an array existed simply
-    * contribute nothing for it — conservative, never wrong. */
-  private def foldCkptTail[T](root: String, gen: Int, key: String,
-      empty: T)(fold: (T, String) => T): T =
-    foldCkptTailAt(root, gen, key, empty)(_ => fold)
-
-  /** [[foldCkptTail]] with the fold told which generation — the
-    * checkpoint's or the commit's — each line comes from. */
-  private def foldCkptTailAt[T](root: String, gen: Int, key: String,
-      empty: T)(fold: Int => (T, String) => T): T = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    val baseV = base.map(_._1).getOrElse(-1)
-    // A checkpoint written before `key` existed carries NO such array —
-    // it must not shadow the commits below it (r14 ADVICE: an old
-    // checkpoint silently erased txn records, so a restarted streaming
-    // writer would replay a committed epoch). Back-fill from the commits
-    // below the checkpoint in that case. A current-code checkpoint whose
-    // resolved array was EMPTY also omits the key, but then the commits
-    // below carry nothing the checkpoint's snapshot still references —
-    // the back-fill is at worst extra inert lines for retired files.
-    val baseAcc = base match {
-      case Some((bv, f)) =>
-        val h = ckptHandle(fs, root, bv, f)
-        if (h.has(key)) h.lines(key).foldLeft(empty)(fold(bv))
-        else commits.filter(_._1 <= baseV)
-          .foldLeft(empty) { case (acc, (cv, cf)) =>
-            parseArr(readBytes(fs, cf), key).foldLeft(acc)(fold(cv))
-          }
-      case None => empty
-    }
-    commits
-      .filter(c => c._1 > baseV && c._1 <= gen)
-      .foldLeft(baseAcc) { case (acc, (cv, f)) =>
-        parseArr(readBytes(fs, f), key).foldLeft(acc)(fold(cv))
-      }
   }
 
   /** The per-file (col, min, max) stats visible at generation `gen`:
@@ -911,16 +1073,7 @@ object TimeTravel extends QueryModule {
     * lines for its snapshot's files) plus the tail commits. Numeric
     * (long-valued) columns only — the fixture's key columns. */
   private[graft] def statsFor(root: String, gen: Int)
-      : Map[(String, String), (Long, Long)] =
-    foldCkptTail(root, gen, "stats",
-      Map.empty[(String, String), (Long, Long)]) { (m, line) =>
-      line.split('|') match {
-        case Array(name, c, lo, hi) =>
-          try m.updated((name, c), (lo.toLong, hi.toLong))
-          catch { case _: NumberFormatException => m }
-        case _ => m
-      }
-    }
+      : Map[(String, String), (Long, Long)] = snapshot(root, gen).stats
 
   /** Row-level MERGE (upsert) into a [[commitBucketed]] table, pruned to
     * the TOUCHED buckets: source keys hash to a bucket set, only the
@@ -934,11 +1087,12 @@ object TimeTravel extends QueryModule {
     * conflict. Returns the committed version. */
   def mergeInto(s: SparkSession, root: String, source: DataFrame,
       keyCol: String, nBuckets: Int): Int = {
-    val gen = currentVersion(root)
+    val snap = latest(root)
+    val gen = snap.gen
     require(gen >= 0, s"time travel: cannot merge into empty table $root")
     // a MERGE INSERTS unmatched source rows — on an identity table
     // those would need engine ids the merge path does not assign
-    requireNotIdentity(root, "merges")
+    requireNotIdentityIn(root, snap.props, "merges")
     // COLUMN-MAPPED tables are supported (r18, lifting the r17 refusal):
     // `source` and `keyCol` arrive LOGICAL; the touched buckets read
     // physically (renamed columns keep their bytes, defaults filled)
@@ -948,16 +1102,14 @@ object TimeTravel extends QueryModule {
     val touched = source
       .select(pmod(hash(col(keyCol)), lit(nBuckets)).as("gb"))
       .distinct().collect().map(_.getInt(0)).toSet // ≤ nBuckets ints
-    val files = snapshotFiles(root, gen)
-    val toRewrite = files.filter {
+    val toRewrite = snap.files.filter {
       case BucketName(b) => touched(b.toInt)
       case _ => true // a non-bucketed file may hold any key: rewrite it
     }
-    val dvAtRead = dvsFor(root, gen)
+    val dvAtRead = snap.dvs
     val existing =
       if (toRewrite.isEmpty) source.limit(0)
-      else toLogicalFrame(root, gen,
-        readFilesFilledDvs(s, root, gen, toRewrite))
+      else toLogicalFrameIn(snap, readFilesFilledDvsIn(s, snap, toRewrite))
     val dataCols = source.columns.filter(_ != keyCol)
     require(existing.columns.sorted.sameElements(source.columns.sorted),
       s"time travel: merge source schema ${source.columns.toSeq} does not " +
@@ -965,7 +1117,7 @@ object TimeTravel extends QueryModule {
     // two source rows with the same key are an ambiguous upsert — the
     // full_outer join would fan the match out into duplicates. Delta
     // raises its multiple-match error at merge time; the guard is one
-    // small agg over the DELTA (never the table). (r13 ADVICE)
+    // small agg over the DELTA (never the table).
     require(source.groupBy(keyCol).count()
         .filter(col("count") > 1).limit(1).isEmpty,
       s"time travel: merge source carries duplicate $keyCol values — " +
@@ -974,7 +1126,7 @@ object TimeTravel extends QueryModule {
     // carrying NULL in a data column updates the table to NULL (MERGE
     // UPDATE semantics, and what the CDF update_postimage already
     // claims). Matches are tracked by a marker column, not value
-    // coalescing (r13 ADVICE: coalesce silently kept old values).
+    // coalescing, which would silently keep the old values.
     val merged = existing.as("b")
       .join(source.withColumn("__smark", lit(1)).as("s"),
         Seq(keyCol), "full_outer")
@@ -985,7 +1137,7 @@ object TimeTravel extends QueryModule {
     // CDF on: matched keys emit pre/post images, unmatched source rows
     // emit inserts; carried-over existing rows emit nothing
     val cdc =
-      if (!cdfEnabled(root, gen)) Nil
+      if (!snap.cdf) Nil
       else {
         val srcKeys = source.select(keyCol).distinct()
         val exKeys = existing.select(keyCol).distinct()
@@ -998,7 +1150,7 @@ object TimeTravel extends QueryModule {
           .withColumn("_change_type", lit("insert"))
         // change files land PHYSICAL-named (the feed's read-time
         // projection surfaces logical names — q237)
-        writeCdcFiles(s, root, toPhysicalFrame(root, gen,
+        writeCdcFiles(s, root, toPhysicalFrameCm(snap.colmap,
           pre.unionByName(post).unionByName(ins),
           extra = Seq("_change_type")))
       }
@@ -1006,7 +1158,7 @@ object TimeTravel extends QueryModule {
       cdc = cdc,
       dvExpect =
         Some(toRewrite.map(f => f -> dvAtRead.get(f).map(_._1)).toMap),
-      ddlExpect = Some(ddlEpoch(root, gen)))
+      ddlExpect = Some(ddlEpochOf(snap)))
   }
 
   /** Row-level DELETE of `statCol BETWEEN lo AND hi`, pruned by the log's
@@ -1173,56 +1325,26 @@ object TimeTravel extends QueryModule {
   }
 
   /** The deletion vectors in force at `gen`: file → (sidecar name,
-    * cardinality), newest commit's entry per file winning and the
-    * explicit clear marker (`file|-|0` — written by restore) dropping
-    * one. Resolved like [[resolveSnapshot]]: newest checkpoint ≤ gen as
-    * the base, then only the tail commits — O(tail) behind a checkpoint,
-    * never the whole log. Entries for files no longer in the snapshot
-    * are inert (readers intersect with the snapshot's file list). */
+    * cardinality), newest commit's entry per file winning. Entries for
+    * files no longer in the snapshot are inert (readers intersect with
+    * the snapshot's file list). */
   private[graft] def dvsFor(root: String, gen: Int)
-      : Map[String, (String, Long)] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    def fold(m: Map[String, (String, Long)], line: String) =
-      line.split('|') match {
-        case Array(fn, "-", _) => m - fn
-        case Array(fn, dv, card) =>
-          try m.updated(fn, (dv, card.toLong))
-          catch { case _: NumberFormatException => m }
-        case _ => m
-      }
-    val baseMap = base
-      .map { case (v, f) =>
-        ckptHandle(fs, root, v, f).lines("dvs")
-          .foldLeft(Map.empty[String, (String, Long)])(fold)
-      }
-      .getOrElse(Map.empty)
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseMap) { case (m, (_, f)) =>
-        parseArr(readBytes(fs, f), "dvs").foldLeft(m)(fold)
-      }
-  }
+      : Map[String, (String, Long)] = snapshot(root, gen).dvs
 
   /** The reader features REQUIRED at `gen`, cumulative (a mask written
-    * at gen 3 still masks at gen 30): newest checkpoint ≤ gen as the
-    * base, tail commits union in — the resolution shape every
-    * `*AsOf` shares. Folded into checkpoints so retention cannot drop
-    * the only commit that recorded a feature. */
-  private[graft] def featuresAsOf(root: String, gen: Int): Set[String] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    val baseF = base
-      .map { case (v, f) => ckptHandle(fs, root, v, f).lines("features").toSet }
-      .getOrElse(Set.empty[String])
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseF) { case (acc, (_, f)) =>
-        acc ++ parseArr(readBytes(fs, f), "features")
-      }
-  }
+    * at gen 3 still masks at gen 30) — folded into checkpoints so
+    * retention cannot drop the only commit that recorded a feature. */
+  private[graft] def featuresAsOf(root: String, gen: Int): Set[String] =
+    snapshot(root, gen).features
 
-  /** Read `files` (a subset of generation `gen`'s snapshot) with that
+  /** A reader of `root`'s data files under `sch` — parquet inference
+    * when no schema is logged. */
+  private def schemaReader(s: SparkSession, root: String,
+      sch: Option[org.apache.spark.sql.types.StructType])
+      : Seq[String] => DataFrame =
+    fl => sch.fold(s.read)(s.read.schema(_)).parquet(fl.map(dataPath(root, _)): _*)
+
+  /** Read `files` (a subset of snapshot `snap`) with its
     * generation's deletion vectors applied: DV'd files are read with
     * parquet's generated per-file row index and LEFT-ANTI-joined against
     * the unpacked position sets — sidecars are read in EXECUTORS (the
@@ -1230,17 +1352,17 @@ object TimeTravel extends QueryModule {
     * broadcast when the logged cardinalities say it fits. Clean files
     * take the untouched plain path; with no DVs in force this is exactly
     * `reader(files)` — zero overhead for the common case. */
-  private def readFilesWithDvs(s: SparkSession, root: String, gen: Int,
+  private def readFilesWithDvs(s: SparkSession, snap: Snapshot,
       files: Seq[String],
       reader: Seq[String] => DataFrame): DataFrame = {
-    val dvs = dvsFor(root, gen)
+    val dvs = snap.dvs
     val dvFiles = files.filter(dvs.contains)
     if (dvFiles.isEmpty) reader(files)
     else {
       val plain = files.filterNot(dvs.contains)
       val conf = new org.apache.spark.util.SerializableConfiguration(
         s.sessionState.newHadoopConf())
-      val dvRoot = dvDir(root)
+      val dvRoot = dvDir(snap.root)
       import s.implicits._
       val entries = dvFiles.map(f => (f, dvs(f)._1))
       val deleted = s.createDataset(entries)
@@ -1273,8 +1395,12 @@ object TimeTravel extends QueryModule {
     * schema at `toGen` is where names surface to users. */
   private def physSchemaAsOf(root: String, gen: Int)
       : Option[org.apache.spark.sql.types.StructType] =
-    schemaAsOf(root, gen).map { sc =>
-      val cm = colmapAsOf(root, gen)
+    physSchemaOf(snapshot(root, gen))
+
+  private def physSchemaOf(snap: Snapshot)
+      : Option[org.apache.spark.sql.types.StructType] =
+    snap.schema.map { sc =>
+      val cm = snap.colmap
       if (cm.isEmpty) sc
       else org.apache.spark.sql.types.StructType(
         sc.map(f => f.copy(name = cm.getOrElse(f.name, f.name))))
@@ -1290,17 +1416,22 @@ object TimeTravel extends QueryModule {
     * rare case); DML callers pass their touched set, but full-table
     * maintenance (compact, purgeMasks) passes the whole snapshot — so
     * the probes run on a bounded driver thread pool (16-way), not
-    * serially (r17 ADVICE). One group with no fill on default-free
+    * serially. One group with no fill on default-free
     * tables. */
   private def defaultFillGroups(root: String, gen: Int,
+      files: Seq[String]): Seq[(Seq[String], Map[String, Column])] =
+    defaultFillGroupsIn(snapshot(root, gen), files)
+
+  private def defaultFillGroupsIn(snap: Snapshot,
       files: Seq[String]): Seq[(Seq[String], Map[String, Column])] = {
+    val root = snap.root
     // defaults are keyed by PHYSICAL name, so the membership test and
     // the type lookup both run against the physical schema
-    val schemaOpt = physSchemaAsOf(root, gen)
+    val schemaOpt = physSchemaOf(snap)
     // defaults whose column is no longer in the schema are STALE (the
     // defaulted column was dropped; its graft.default.* line is inert)
     // — skipped, the same tolerance the DSv2 reader's default map has
-    val defaults = defaultsFor(root, gen).filter { case (c, _) =>
+    val defaults = snap.defaults.filter { case (c, _) =>
       schemaOpt.exists(_.fieldNames.contains(c)) }
     if (defaults.isEmpty || files.isEmpty) return Seq((files, Map.empty))
     val schema = schemaOpt.get
@@ -1353,27 +1484,23 @@ object TimeTravel extends QueryModule {
   }
 
   /** Read `files` with generation `gen`'s deletion vectors applied AND
-    * recorded column DEFAULTS filled per file group (r16 ADVICE: the
-    * raw `spark.read.parquet` the row-level maintenance ops used could
-    * persist NULL where every reader served a default). The explicit
+    * recorded column DEFAULTS filled per file group, so a row-level
+    * rewrite persists the default every reader serves, never NULL. The explicit
     * logged read schema also up-converts type-WIDENED narrow files, the
     * same way [[readAsOf]] does. The frame carries PHYSICAL names
     * (identical to logical on unmapped tables) — callers that surface
     * rows to users project, like readAsOfMapped. Zero extra cost on
     * default-free unmapped tables: one group, plain schema read. */
   private[graft] def readFilesFilledDvs(s: SparkSession, root: String,
-      gen: Int, files: Seq[String]): DataFrame = {
+      gen: Int, files: Seq[String]): DataFrame =
+    readFilesFilledDvsIn(s, snapshot(root, gen), files)
+
+  private def readFilesFilledDvsIn(s: SparkSession, snap: Snapshot,
+      files: Seq[String]): DataFrame = {
     require(files.nonEmpty, "time travel: readFilesFilledDvs of no files")
-    val sch = physSchemaAsOf(root, gen)
-    val reader: Seq[String] => DataFrame = fl => {
-      val paths = fl.map(f => dataPath(root, f))
-      sch match {
-        case Some(sc) => s.read.schema(sc).parquet(paths: _*)
-        case None => s.read.parquet(paths: _*)
-      }
-    }
-    defaultFillGroups(root, gen, files).map { case (fls, fills) =>
-      fills.foldLeft(readFilesWithDvs(s, root, gen, fls, reader)) {
+    val reader = schemaReader(s, snap.root, physSchemaOf(snap))
+    defaultFillGroupsIn(snap, files).map { case (fls, fills) =>
+      fills.foldLeft(readFilesWithDvs(s, snap, fls, reader)) {
         case (d, (c, v)) => d.withColumn(c, v)
       }
     }.reduce(_ unionByName _)
@@ -1399,9 +1526,13 @@ object TimeTravel extends QueryModule {
   /** Stats-overlapping files of snapshot `gen` for `statCol ∈ [lo, hi]`
     * — the candidate set every row-level band operation starts from. */
   private def touchedFiles(root: String, gen: Int, statCol: String,
+      lo: Long, hi: Long): Seq[String] =
+    touchedIn(snapshot(root, gen), statCol, lo, hi)
+
+  private def touchedIn(snap: Snapshot, statCol: String,
       lo: Long, hi: Long): Seq[String] = {
-    val stats = statsFor(root, gen)
-    snapshotFiles(root, gen).filter { f =>
+    val stats = snap.stats
+    snap.files.filter { f =>
       stats.get((f, statCol)) match {
         case Some((fLo, fHi)) => fHi >= lo && fLo <= hi
         case None => true // no stats: may hold matching rows
@@ -1421,7 +1552,8 @@ object TimeTravel extends QueryModule {
   private def writeMaskVectors(s: SparkSession, root: String, gen: Int,
       touched: Seq[String], statCol: String, lo: Long, hi: Long)
       : (Seq[(String, String, Long)], Map[String, String]) = {
-    val dvs = dvsFor(root, gen)
+    val snap = snapshot(root, gen)
+    val dvs = snap.dvs
     val oldByFile: Map[String, String] =
       touched.flatMap(f => dvs.get(f).map(f -> _._1)).toMap
     val conf = taskConf(s)
@@ -1434,15 +1566,10 @@ object TimeTravel extends QueryModule {
     // up-convert; statCol arrives physical — log stats are phys-keyed),
     // defaulted band columns fill before the band filter — a default
     // equal to an in-band value masks pre-evolution rows correctly
-    val sch = physSchemaAsOf(root, gen)
-    val candidates = defaultFillGroups(root, gen, touched)
+    val reader = schemaReader(s, root, physSchemaOf(snap))
+    val candidates = defaultFillGroupsIn(snap, touched)
       .map { case (fls, fills) =>
-        val paths = fls.map(f => dataPath(root, f))
-        val base = sch match {
-          case Some(sc) => s.read.schema(sc).parquet(paths: _*)
-          case None => s.read.parquet(paths: _*)
-        }
-        base.select(
+        reader(fls).select(
           element_at(split(col("_metadata.file_path"), "/"), -1).as("f"),
           col("_metadata.row_index").as("i"),
           fills.getOrElse(statCol, col(statCol)).as("__band"))
@@ -1754,14 +1881,10 @@ object TimeTravel extends QueryModule {
                 .flatMap(n => readPositions(s"$dvRoot/frag/$n", confB.value))
                 .distinct.map(i => (f, i))
             }.toDF("__dvf", "__dvi")
+          val reader = schemaReader(s, root, sch)
           defaultFillGroups(root, gen, frags.map(_._1))
             .map { case (fls, fills) =>
-              val paths = fls.map(f => dataPath(root, f))
-              val base = sch match {
-                case Some(sc) => s.read.schema(sc).parquet(paths: _*)
-                case None => s.read.parquet(paths: _*)
-              }
-              fills.foldLeft(base
+              fills.foldLeft(reader(fls)
                 .withColumn("__dvf",
                   element_at(split(col("_metadata.file_path"), "/"), -1))
                 .withColumn("__dvi", col("_metadata.row_index"))) {
@@ -1809,15 +1932,14 @@ object TimeTravel extends QueryModule {
       // assigned ids — only fresh INSERT/epoch paths run the identity
       // fill (and its GENERATED ALWAYS refusal)
       identityFill: Boolean = true): Int = {
-    validateSchema(s, root,
+    val snap0 = latest(root)
+    validateSchemaIn(snap0,
       org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-    val gen0 = currentVersion(root)
     if (temps.nonEmpty) {
       // staged temps carry PHYSICAL names on mapped tables; constraints
       // are written in LOGICAL ones — project before validating, or a
       // CHECK on a renamed column would null-fill and pass vacuously
-      val cm = if (gen0 < 0) Map.empty[String, String]
-        else colmapAsOf(root, gen0)
+      val cm = snap0.colmap
       val raw = s.read.parquet(temps: _*)
       val logical =
         if (cm.isEmpty) raw
@@ -1826,9 +1948,10 @@ object TimeTravel extends QueryModule {
           raw.select(raw.columns.toSeq
             .map(c => col(c).as(inv.getOrElse(c, c))): _*)
         }
-      validateConstraints(s, root, logical)
+      requireWritable(snap0)
+      validateConstraintsIn(snap0, logical)
     }
-    val (fs, _) = fsFor(root)
+    val fs = snap0.fs
     // on a lost identity race the rename has already happened — the
     // retry re-reads these (uncommitted, vacuum-fodder-if-abandoned)
     // data-dir paths and re-assigns over them
@@ -1852,21 +1975,17 @@ object TimeTravel extends QueryModule {
     }
     // a CTAS cannot be born GENERATED ALWAYS — its SELECT already
     // carries id values the high-water mark never covered, and a later
-    // INSERT would re-assign from hwm 0 into collisions (r19 review)
+    // INSERT would re-assign from hwm 0 into collisions
     require(temps.isEmpty || !props.exists(p =>
         p.startsWith(IdentityColKey + "|") &&
           p.length > IdentityColKey.length + 1),
       "time travel: identity tables are created EMPTY (CREATE TABLE " +
         "with TBLPROPERTIES('graft.identityCol'=…), then INSERT) — a " +
         "CTAS would carry user-supplied ids outside the high-water mark")
-    val idCol = (if (gen0 < 0) None
-      else propsAsOf(root, gen0).get(IdentityColKey)).filter(_.nonEmpty)
-    val idPhys = idCol.map(c =>
-      (if (gen0 < 0) Map.empty[String, String] else colmapAsOf(root, gen0))
-        .getOrElse(c, c))
+    val idCol = snap0.props.get(IdentityColKey).filter(_.nonEmpty)
+    val idPhys = idCol.map(c => snap0.colmap.getOrElse(c, c))
     // one probe frame serves the column check AND the GENERATED ALWAYS
-    // refusal (r19 review: four separate s.read.parquet calls re-read
-    // every footer on the streaming hot path)
+    // refusal, so the streaming hot path reads each footer once
     lazy val probe = s.read.parquet(temps: _*)
     if (!identityFill || temps.isEmpty || idPhys.isEmpty ||
         !probe.columns.contains(idPhys.get))
@@ -1888,9 +2007,7 @@ object TimeTravel extends QueryModule {
     var cur = temps
     var attempts = 0
     while (true) {
-      val liveGen = currentVersion(root)
-      val prevHwm =
-        if (liveGen < 0) None else propsAsOf(root, liveGen).get(IdentityHwmKey)
+      val prevHwm = latest(root).props.get(IdentityHwmKey)
       val hwm = prevHwm.map(_.toLong).getOrElse(0L)
       val stageDir = s"$root/stage-id-${java.util.UUID.randomUUID().toString.take(8)}"
       tableWriter(s.read.parquet(cur: _*)
@@ -1908,7 +2025,7 @@ object TimeTravel extends QueryModule {
         fs.delete(new org.apache.hadoop.fs.Path(stageDir), true)
         return v
       } catch {
-        // typed conflict (r19 ADVICE): the retry keys on the exception
+        // typed conflict: the retry keys on the exception
         // CLASS, not a message substring, so rewording the conflict (or
         // another conflict that happens to mention "identity") cannot
         // change retry behavior
@@ -2078,7 +2195,7 @@ object TimeTravel extends QueryModule {
     val (fs, commits, _) = listLog(root)
     var last = 0L
     commits.map { case (v, f) =>
-      val raw = commitTsIn(readBytes(fs, f)).getOrElse(
+      val raw = commitTsIn(commitText(fs, f)).getOrElse(
         fs.getFileStatus(f).getModificationTime)
       val t = math.max(raw, last + 1)
       last = t
@@ -2128,30 +2245,8 @@ object TimeTravel extends QueryModule {
     * accumulated across commits — a re-add under the same name replaces,
     * the clear marker (`name|-`) drops. Resolved from the newest
     * checkpoint ≤ gen + the tail commits, like [[dvsFor]]. */
-  def constraintsAsOf(root: String, gen: Int): Seq[(String, String)] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    def fold(acc: Vector[(String, String)], line: String) = {
-      val i = line.indexOf('|') // the expr may itself contain '|' (OR)
-      if (i < 0) acc
-      else {
-        val (n, e) = (line.substring(0, i), line.substring(i + 1))
-        if (e == "-") acc.filterNot(_._1 == n)
-        else acc.filterNot(_._1 == n) :+ ((n, e))
-      }
-    }
-    val baseCs = base
-      .map { case (v, f) =>
-        ckptHandle(fs, root, v, f).lines("constraints")
-          .foldLeft(Vector.empty[(String, String)])(fold)
-      }
-      .getOrElse(Vector.empty)
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseCs) { case (acc, (_, f)) =>
-        parseArr(readBytes(fs, f), "constraints").foldLeft(acc)(fold)
-      }
-  }
+  def constraintsAsOf(root: String, gen: Int): Seq[(String, String)] =
+    snapshot(root, gen).constraints
 
   /** ADD a CHECK constraint (Delta's ALTER TABLE ADD CONSTRAINT): the
     * CURRENT snapshot must already satisfy it (one scan, loud failure
@@ -2186,15 +2281,13 @@ object TimeTravel extends QueryModule {
       df: DataFrame): Unit = {
     // the writer-feature gate rides along: a refusal must come before
     // the caller's staging write, not from commitNames after it
-    val gen = currentVersion(root)
-    requireFeaturesWritableAt(root, gen)
-    validateConstraintsAt(root, gen, df)
+    val snap = latest(root)
+    requireWritable(snap)
+    validateConstraintsIn(snap, df)
   }
 
-  private def validateConstraintsAt(root: String, gen: Int,
-      df: DataFrame): Unit = {
-    if (gen < 0) return
-    val cs = constraintsAsOf(root, gen)
+  private def validateConstraintsIn(snap: Snapshot, df: DataFrame): Unit = {
+    val cs = snap.constraints
     if (cs.isEmpty) return
     val viol = cs.map(c => coalesce(!expr(c._2), lit(false))).reduce(_ || _)
     if (!df.filter(viol).limit(1).isEmpty) {
@@ -2203,7 +2296,7 @@ object TimeTravel extends QueryModule {
         .map(_._1)
       throw new IllegalArgumentException(
         s"time travel: commit violates CHECK constraint(s) " +
-          s"${names.mkString(", ")} under $root — nothing was committed")
+          s"${names.mkString(", ")} under ${snap.root} — nothing was committed")
     }
   }
 
@@ -2214,24 +2307,20 @@ object TimeTravel extends QueryModule {
     * generation refuses loudly, listing the drift. Nullability is not
     * compared (parquet writers flip it freely). */
   private def validateSchema(s: SparkSession, root: String,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val gen = currentVersion(root)
-    if (gen >= 0) validateSchemaAt(root, gen, propsAsOf(root, gen), schema)
-  }
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    validateSchemaIn(latest(root), schema)
 
-  private def validateSchemaAt(root: String, gen: Int,
-      props: Map[String, String],
+  private def validateSchemaIn(snap: Snapshot,
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    if (gen < 0 || !props.get("graft.enforceSchema").contains("true"))
-      return
-    schemaAsOf(root, gen).foreach { logged =>
+    if (!snap.props.get("graft.enforceSchema").contains("true")) return
+    snap.schema.foreach { logged =>
       val want = logged.fields.map(f => (f.name, f.dataType)).toSeq
       val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
       if (want != got)
         throw new IllegalArgumentException(
           s"time travel: commit schema ${got.mkString(", ")} does not " +
             s"match the enforced table schema ${want.mkString(", ")} " +
-            s"under $root — drop graft.enforceSchema or align the writer")
+            s"under ${snap.root} — drop graft.enforceSchema or align the writer")
     }
   }
 
@@ -2240,25 +2329,8 @@ object TimeTravel extends QueryModule {
   /** The table PROPERTIES in force at `gen` (Delta's TBLPROPERTIES):
     * `key|value` lines, last write per key winning; resolved from the
     * newest checkpoint ≤ gen + the tail commits like [[dvsFor]]. */
-  def propsAsOf(root: String, gen: Int): Map[String, String] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    def fold(m: Map[String, String], line: String) = {
-      val i = line.indexOf('|')
-      if (i < 0) m else m.updated(line.substring(0, i), line.substring(i + 1))
-    }
-    val baseMap = base
-      .map { case (v, f) =>
-        ckptHandle(fs, root, v, f).lines("props")
-          .foldLeft(Map.empty[String, String])(fold)
-      }
-      .getOrElse(Map.empty)
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseMap) { case (m, (_, f)) =>
-        parseArr(readBytes(fs, f), "props").foldLeft(m)(fold)
-      }
-  }
+  def propsAsOf(root: String, gen: Int): Map[String, String] =
+    snapshot(root, gen).props
 
   /** SET a table property as a metadata-only commit (Delta's ALTER TABLE
     * SET TBLPROPERTIES). `graft.enableChangeDataFeed=true` switches the
@@ -2272,9 +2344,7 @@ object TimeTravel extends QueryModule {
   }
 
   private[graft] def cdfEnabled(root: String, gen: Int): Boolean =
-    gen >= 0 &&
-      propsAsOf(root, gen).get("graft.enableChangeDataFeed")
-        .contains("true")
+    snapshot(root, gen).cdf
 
   // ---- snapshot TAGS (Iceberg's named refs): a name pinned to a
   // generation, resolvable wherever a version number is ------------------
@@ -2284,10 +2354,7 @@ object TimeTravel extends QueryModule {
     * property — checkpoint + tail, surviving retention through the
     * checkpoint fold. */
   def tagsFor(root: String, gen: Int): Map[String, Int] =
-    propsAsOf(root, gen).collect {
-      case (k, v) if k.startsWith("graft.tag.") && v.nonEmpty =>
-        k.stripPrefix("graft.tag.") -> v.toInt
-    }
+    snapshot(root, gen).tags
 
   /** TAG generation `gen` as `name` (Iceberg's createTag): one metadata
     * commit. The tag resolves through `VERSION AS OF 'name'` and
@@ -2342,10 +2409,7 @@ object TimeTravel extends QueryModule {
     * (empty value = dropped), name → base generation — resolved like
     * every property (checkpoint + tail, retention-proof). */
   def branchesFor(root: String, gen: Int): Map[String, Int] =
-    propsAsOf(root, gen).collect {
-      case (k, v) if k.startsWith("graft.branch.") && v.nonEmpty =>
-        k.stripPrefix("graft.branch.") -> v.toInt
-    }
+    snapshot(root, gen).branches
 
   // '@' separates name from sequence and is OUTSIDE the name charset:
   // with '-' as the separator, branch "x" commit 12 ("b-x-12.json")
@@ -2388,19 +2452,21 @@ object TimeTravel extends QueryModule {
 
   /** The branch's base-first merged mapping, for the DSv2 branch scan. */
   private[graft] def branchColmapOf(root: String, name: String)
-      : Map[String, String] = {
-    val cur = currentVersion(root)
-    val base = branchesFor(root, cur).getOrElse(name,
-      throw new IllegalArgumentException(
-        s"time travel: no branch '$name' under $root"))
-    branchColmap(root, base)
-  }
+      : Map[String, String] = branchColmapOfIn(latest(root), name)
 
-  private def branchColmap(root: String, base: Int): Map[String, String] = {
-    val cmCur = colmapAsOf(root, currentVersion(root))
-    val cmBase = colmapAsOf(root, base)
-    cmCur ++ cmBase // base wins on shared logical names
-  }
+  /** [[branchColmapOf]] over `snap`, the latest generation. */
+  private def branchColmapOfIn(snap: Snapshot, name: String)
+      : Map[String, String] =
+    branchColmapIn(snap, snap.branches.getOrElse(name,
+      throw new IllegalArgumentException(
+        s"time travel: no branch '$name' under ${snap.root}")))
+
+  private def branchColmap(root: String, base: Int): Map[String, String] =
+    branchColmapIn(latest(root), base)
+
+  /** The base-first merge over `snap`, the latest generation. */
+  private def branchColmapIn(snap: Snapshot, base: Int): Map[String, String] =
+    snap.colmap ++ snap.at(base).colmap // base wins on shared logical names
 
   /** CREATE a branch at generation `gen` (Iceberg's createBranch): one
     * metadata commit recording the base. The base generation is PINNED
@@ -2504,10 +2570,8 @@ object TimeTravel extends QueryModule {
     // base-first merged mapping: base-era logical names keep resolving
     // across main-side renames, post-fork adds get their fresh physical
     // names (see branchColmap)
-    val (_, phys) = writePrologue(s, root, df, what = "branch appends",
-      colmapAt = Some(cur => branchColmap(root, branchesFor(root, cur)
-        .getOrElse(name, throw new IllegalArgumentException(
-          s"time travel: no branch '$name' under $root")))))
+    val (_, phys) = writePrologue(s, latest(root), df, what = "branch appends",
+      colmapAt = Some(branchColmapOfIn(_, name)))
     val added = stageFiles(s, root, phys).map(_.name)
     val nrows = added.map(f => s"$f|${footerRows(root, f)}")
     commitNamesToBranch(root, name, added, Nil, nrows, df.schema.toDDL)
@@ -2609,10 +2673,8 @@ object TimeTravel extends QueryModule {
     * commits could reuse before the publish lands. Refuse loudly until
     * branch-scoped id reservation exists (branch DML is fine: the
     * copy-on-write rewrites carry EXISTING ids). */
-  private def requireNotIdentity(root: String, what: String): Unit = {
-    val gen = currentVersion(root)
-    if (gen >= 0) requireNotIdentityIn(root, propsAsOf(root, gen), what)
-  }
+  private def requireNotIdentity(root: String, what: String): Unit =
+    requireNotIdentityIn(root, latest(root).props, what)
 
   private def requireNotIdentityIn(root: String, props: Map[String, String],
       what: String): Unit =
@@ -2696,8 +2758,8 @@ object TimeTravel extends QueryModule {
         sc.map(f => f.copy(name = cmap.getOrElse(f.name, f.name)))))
     // a branch forked at an empty/truncated snapshot with no branch
     // commits has ZERO files — answer an empty frame under the resolved
-    // schema, mirroring readAsOfMapped's empty branch (r18 ADVICE: the
-    // bare parquet reader threw unable-to-infer-schema instead)
+    // schema, mirroring readAsOfMapped's empty branch (the bare
+    // parquet reader would throw unable-to-infer-schema)
     if (files.isEmpty) {
       val sc = physSchema.orElse(logical).getOrElse(
         throw new IllegalArgumentException(
@@ -2712,19 +2774,14 @@ object TimeTravel extends QueryModule {
         case _ => empty
       }
     }
-    val reader: Seq[String] => DataFrame = fl => {
-      val paths = fl.map(f => dataPath(root, f))
-      physSchema match {
-        case Some(sc) => s.read.schema(sc).parquet(paths: _*)
-        case None => s.read.parquet(paths: _*)
-      }
-    }
+    val reader = schemaReader(s, root, physSchema)
     // recorded column DEFAULTS fill per footer group, exactly like
-    // every other read path (r18 review: the raw read served NULL on
-    // pre-default base files where graft_asof serves the default)
-    val raw = defaultFillGroups(root, base, files)
+    // every other read path: a raw read would serve NULL on
+    // pre-default base files where graft_asof serves the default
+    val baseSnap = snapshot(root, base)
+    val raw = defaultFillGroupsIn(baseSnap, files)
       .map { case (fls, fills) =>
-        fills.foldLeft(readFilesWithDvs(s, root, base, fls, reader)) {
+        fills.foldLeft(readFilesWithDvs(s, baseSnap, fls, reader)) {
           case (d, (c, v)) => d.withColumn(c, v)
         }
       }.reduce(_ unionByName _)
@@ -3112,32 +3169,17 @@ object TimeTravel extends QueryModule {
     * from the newest checkpoint ≤ gen + the tail commits like
     * [[propsAsOf]]. Unmapped fields are identity — a table that never
     * renamed anything has an empty map and pays nothing. */
-  def colmapAsOf(root: String, gen: Int): Map[String, String] = {
-    val (fs, commits, ckpts) = listLog(root)
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    def fold(m: Map[String, String], line: String) =
-      line.split('|') match {
-        case Array(l, "-") => m - l
-        case Array(l, p) => m.updated(l, p)
-        case _ => m
-      }
-    val baseMap = base
-      .map { case (v, f) =>
-        ckptHandle(fs, root, v, f).lines("colmap")
-          .foldLeft(Map.empty[String, String])(fold)
-      }
-      .getOrElse(Map.empty)
-    commits
-      .filter(c => c._1 > base.map(_._1).getOrElse(-1) && c._1 <= gen)
-      .foldLeft(baseMap) { case (m, (_, f)) =>
-        parseArr(readBytes(fs, f), "colmap").foldLeft(m)(fold)
-      }
-  }
+  def colmapAsOf(root: String, gen: Int): Map[String, String] =
+    snapshot(root, gen).colmap
 
   private def logicalSchemaAt(root: String, gen: Int)
       : org.apache.spark.sql.types.StructType =
-    schemaAsOf(root, gen).getOrElse(throw new IllegalStateException(
-      s"time travel: no logged schema under $root at generation $gen — " +
+    logicalSchemaOf(snapshot(root, gen))
+
+  private def logicalSchemaOf(snap: Snapshot)
+      : org.apache.spark.sql.types.StructType =
+    snap.schema.getOrElse(throw new IllegalStateException(
+      s"time travel: no logged schema under ${snap.root} at generation ${snap.gen} — " +
         "column mapping needs one (every commit since schema logging " +
         "writes it)"))
 
@@ -3229,15 +3271,6 @@ object TimeTravel extends QueryModule {
       props = Seq(s"graft.widened.$phys|${oldDt.sql}"))
   }
 
-  /** PHYSICAL names of type-widened columns in force at `gen` — the
-    * footer-aggregate refusal set (old footers' statistics are
-    * narrow-typed). */
-  private[graft] def widenedFor(root: String, gen: Int): Set[String] =
-    propsAsOf(root, gen).collect {
-      case (k, v) if k.startsWith("graft.widened.") && v.nonEmpty =>
-        k.stripPrefix("graft.widened.")
-    }.toSet
-
   /** ADD a column to a mapped table — under a FRESH physical name, so a
     * re-added logical name NEVER resurrects a dropped column's old bytes
     * (the Delta column-mapping guarantee): no file has ever written the
@@ -3272,16 +3305,6 @@ object TimeTravel extends QueryModule {
       schemaDdl = Some(widened.toDDL), colmap = Seq(s"$name|$phys"),
       props = default.map(v => s"graft.default.$phys|$v").toSeq)
   }
-
-  /** Rendered column defaults in force at `gen`, keyed by PHYSICAL
-    * name — the `graft.default.<phys>` properties [[addColumnMapped]]
-    * records. Values are the canonical string renderings the DSv2
-    * reader converts by the logical column type. */
-  private[graft] def defaultsFor(root: String, gen: Int): Map[String, String] =
-    propsAsOf(root, gen).collect {
-      case (k, v) if k.startsWith("graft.default.") && v.nonEmpty =>
-        k.stripPrefix("graft.default.") -> v
-    }
 
   /** AS-OF read through the mapping: parquet is scanned under the
     * PHYSICAL read schema (files that predate an added column null-fill
@@ -3333,6 +3356,31 @@ object TimeTravel extends QueryModule {
     named
   }
 
+  /** The files backing the row-level feed over `(fromGen, toGen]`, per
+    * commit: (absolute path, isChangeFile, version). Plain appends
+    * contribute their data files (the reader constant-fills
+    * `_change_type = insert`); DML commits contribute ONLY their change
+    * files; nodata/metadata commits nothing; a CDF-off rewrite fails
+    * loudly. The planning backbone the DSv2 source shares with
+    * [[readRowChanges]]. */
+  private[graft] def rowChangeFiles(root: String, fromGen: Int, toGen: Int)
+      : Seq[(String, Boolean, Int)] = {
+    val snap = snapshot(root, toGen)
+    require(snap.commits.exists(_._1 == toGen) && fromGen <= toGen,
+      s"time travel: bad change range ($fromGen, $toGen] under $root")
+    changeRange(snap, fromGen, s"row change feed ($fromGen, $toGen] of $root")
+      .flatMap { case (v, added, removed, dvs, cdc) =>
+        if (cdc.nonEmpty) cdc.map(n => (s"${cdcDir(root)}/$n", true, v))
+        else if (removed.nonEmpty || dvs.nonEmpty)
+          throw new IllegalArgumentException(
+            s"time travel: commit $v in ($fromGen, $toGen] rewrote or " +
+              "row-deleted without change files (CDF was not enabled " +
+              "when it ran) — row-level changes are not reconstructible; " +
+              "diff snapshots instead")
+        else added.map(f => (dataPath(root, f), false, v))
+      }
+  }
+
   /** ROW-LEVEL change feed (Delta's `table_changes` with `_change_type`):
     * every row the commits in `(fromGen, toGen]` inserted, deleted, or
     * updated, tagged `_change_type` ∈ {insert, delete, update_preimage,
@@ -3346,75 +3394,16 @@ object TimeTravel extends QueryModule {
     * [[readChangesSince]]. The scan reads exactly the range's added +
     * change files: at 100 TB an incremental consumer pays for the
     * delta's bytes, never the table's. */
-  /** The files backing the row-level feed over `(fromGen, toGen]`, per
-    * commit: (absolute path, isChangeFile, version). Plain appends
-    * contribute their data files (the reader constant-fills
-    * `_change_type = insert`); DML commits contribute ONLY their change
-    * files; nodata/metadata commits nothing; a CDF-off rewrite fails
-    * loudly. The planning backbone the DSv2 source shares with
-    * [[readRowChanges]]. */
-  private[graft] def rowChangeFiles(root: String, fromGen: Int, toGen: Int)
-      : Seq[(String, Boolean, Int)] = {
-    val (fs, commits, _) = listLog(root)
-    require(commits.exists(_._1 == toGen) && fromGen <= toGen,
-      s"time travel: bad change range ($fromGen, $toGen] under $root")
-    // cumulative gate — features recorded before fromGen still govern
-    // the range's files (r17 ADVICE); the per-commit checks below stay
-    // (they cost reads the loop already performs)
-    requireFeatureSetReadable(featuresAsOf(root, toGen),
-      s"row change feed ($fromGen, $toGen] of $root")
-    commits.filter(c => c._1 > fromGen && c._1 <= toGen)
-      .map { case (v, f) =>
-        val txt = readBytes(fs, f)
-        requireFeaturesReadable(txt, s"commit $v of $root")
-        (v, parseArr(txt, "added"), parseArr(txt, "removed"),
-          parseArr(txt, "flags"), parseArr(txt, "dvs"),
-          parseArr(txt, "cdc"))
-      }
-      .filterNot(_._4.contains("nodata"))
-      .flatMap { case (v, added, removed, _, dvs, cdc) =>
-        if (cdc.nonEmpty) cdc.map(n => (s"${cdcDir(root)}/$n", true, v))
-        else if (removed.nonEmpty || dvs.nonEmpty)
-          throw new IllegalArgumentException(
-            s"time travel: commit $v in ($fromGen, $toGen] rewrote or " +
-              "row-deleted without change files (CDF was not enabled " +
-              "when it ran) — row-level changes are not reconstructible")
-        else added.map(f => (dataPath(root, f), false, v))
-      }
-  }
-
   def readRowChanges(s: SparkSession, root: String,
       fromGen: Int, toGen: Int): DataFrame = {
-    val (fs, commits, _) = listLog(root)
-    require(commits.exists(_._1 == toGen) && fromGen <= toGen,
-      s"time travel: bad change range ($fromGen, $toGen] under $root")
-    requireFeatureSetReadable(featuresAsOf(root, toGen),
-      s"row change feed ($fromGen, $toGen] of $root")
-    val range = commits.filter(c => c._1 > fromGen && c._1 <= toGen)
-      .map { case (v, f) =>
-        val txt = readBytes(fs, f)
-        requireFeaturesReadable(txt, s"commit $v of $root")
-        (v, parseArr(txt, "added"), parseArr(txt, "removed"),
-          parseArr(txt, "flags"), parseArr(txt, "dvs"),
-          parseArr(txt, "cdc"))
+    // one frame per commit: its change files, or its appended data
+    // files as inserts; metadata-only commits contribute none
+    val frames = rowChangeFiles(root, fromGen, toGen).groupBy(_._3).toSeq
+      .sortBy(_._1).map { case (v, fls) =>
+        val df = s.read.parquet(fls.map(_._1): _*)
+        (if (fls.head._2) df else df.withColumn("_change_type", lit("insert")))
+          .withColumn("_commit_version", lit(v))
       }
-      .filterNot(_._4.contains("nodata"))
-    val frames = range.flatMap { case (v, added, removed, _, dvs, cdc) =>
-      if (cdc.nonEmpty)
-        Some(s.read.parquet(cdc.map(n => s"${cdcDir(root)}/$n"): _*)
-          .withColumn("_commit_version", lit(v)))
-      else if (removed.nonEmpty || dvs.nonEmpty)
-        throw new IllegalArgumentException(
-          s"time travel: commit $v in ($fromGen, $toGen] rewrote or " +
-            "row-deleted without change files (CDF was not enabled when " +
-            "it ran) — row-level changes are not reconstructible; " +
-            "diff snapshots instead")
-      else if (added.nonEmpty)
-        Some(s.read.parquet(added.map(f => dataPath(root, f)): _*)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(v)))
-      else None // metadata-only commit (props/constraint)
-    }
     require(frames.nonEmpty,
       s"time travel: range ($fromGen, $toGen] has no row changes")
     val raw = frames.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -3459,6 +3448,10 @@ object TimeTravel extends QueryModule {
     * `graft_optimize` on any evolved table (r17). Rows are unchanged by
     * contract, so constraints/enforcement need no re-validation. */
   private[graft] def commitNoData(s: SparkSession, root: String, gen: Int,
+      physDf: DataFrame, removed: Seq[String]): Int =
+    commitNoDataIn(s, snapshot(root, gen), physDf, removed)
+
+  private def commitNoDataIn(s: SparkSession, snap: Snapshot,
       physDf: DataFrame, removed: Seq[String]): Int = {
     // the rewrite's rows were computed from generation `gen`'s DV state:
     // a DV-only commit (merge-on-read DELETE/UPDATE) landing between that
@@ -3467,27 +3460,26 @@ object TimeTravel extends QueryModule {
     // resurrecting deleted rows. dvExpect turns the race into the
     // explicit ConcurrentModificationException every DV-sensitive commit
     // raises; autoCompactIfDue already swallows it and retries on the
-    // next commit (r17 ADVICE).
-    val dvAtRead = dvsFor(root, gen)
-    val added = stageFiles(s, root, physDf).map(_.name)
-    commitNames(s, root, added, removed,
-      schemaDdl = schemaAsOf(root, gen).map(_.toDDL)
-        .orElse(Some(physDf.schema.toDDL)),
+    // next commit.
+    val dvAtRead = snap.dvs
+    val added = stageFiles(s, snap.root, physDf).map(_.name)
+    commitNames(s, snap.root, added, removed,
+      schemaDdl = snap.schema.map(_.toDDL).orElse(Some(physDf.schema.toDDL)),
       flags = Seq("nodata"),
       dvExpect = Some(removed.map(f => f -> dvAtRead.get(f).map(_._1)).toMap))
   }
 
   def compact(s: SparkSession, root: String, targetFiles: Int): Int = {
-    val gen = currentVersion(root)
-    require(gen >= 0, s"time travel: cannot compact empty table $root")
-    requireFeaturesWritable(root)
-    val files = snapshotFiles(root, gen)
-    if (files.size <= targetFiles) gen
+    val snap = latest(root)
+    require(snap.gen >= 0, s"time travel: cannot compact empty table $root")
+    requireWritable(snap)
+    val files = snap.files
+    if (files.size <= targetFiles) snap.gen
     // physical-name read (mapped tables keep their renamed columns'
     // bytes), DV masks applied, defaults filled, widened files
     // up-converted — then the logical schema stays logged
-    else commitNoData(s, root, gen,
-      readFilesFilledDvs(s, root, gen, files).coalesce(targetFiles),
+    else commitNoDataIn(s, snap,
+      readFilesFilledDvsIn(s, snap, files).coalesce(targetFiles),
       removed = files)
   }
 
@@ -3586,10 +3578,12 @@ object TimeTravel extends QueryModule {
     * up-converted) but hand a logical frame to a mapped-aware commit
     * verb. Identity (no projection node) on unmapped tables. */
   private def toLogicalFrame(root: String, gen: Int,
-      phys: DataFrame): DataFrame = {
-    val cm = colmapAsOf(root, gen)
+      phys: DataFrame): DataFrame = toLogicalFrameIn(snapshot(root, gen), phys)
+
+  private def toLogicalFrameIn(snap: Snapshot, phys: DataFrame): DataFrame = {
+    val cm = snap.colmap
     if (cm.isEmpty) phys
-    else phys.select(logicalSchemaAt(root, gen).map(f =>
+    else phys.select(logicalSchemaOf(snap).map(f =>
       col(cm.getOrElse(f.name, f.name)).as(f.name)): _*)
   }
 
@@ -3695,7 +3689,7 @@ object TimeTravel extends QueryModule {
     * categorical-partitioning discipline. */
   def commitPartitioned(s: SparkSession, root: String, df: DataFrame,
       partCol: String, removed: Seq[String] = Nil): Int = {
-    val (cm, phys) = writePrologue(s, root, df)
+    val (cm, phys) = writePrologue(s, latest(root), df)
     val pc = cm.getOrElse(partCol, partCol)
     val staged = stageByValue(s, root, phys, col(pc))
     // '|' is the stats-line separator: a value carrying it would lose
@@ -3720,24 +3714,13 @@ object TimeTravel extends QueryModule {
     * materializing, filtering, or even knowing about a partition column. */
   def commitPartitionedGeneratedMonth(s: SparkSession, root: String,
       df: DataFrame, baseCol: String, removed: Seq[String] = Nil): Int = {
-    val (cm, phys) = writePrologue(s, root, df)
+    val (cm, phys) = writePrologue(s, latest(root), df)
     val bc = cm.getOrElse(baseCol, baseCol)
     val staged = stageByValue(s, root, phys, date_format(col(bc), "yyyy-MM"))
     commitNames(s, root, staged.map(_.name), removed,
       stats = staged.map(st => s"${st.name}|$bc|~month|${st.value}"),
       schemaDdl = Some(df.schema.toDDL))
   }
-
-  /** The per-file GENERATED month values visible at `gen` — the `~month`
-    * stats lines [[commitPartitionedGeneratedMonth]] records. */
-  private def gvalsFor(root: String, gen: Int): Map[String, (String, String)] =
-    foldCkptTail(root, gen, "stats",
-      Map.empty[String, (String, String)]) { (m, line) =>
-      line.split('|') match {
-        case Array(name, c, "~month", v) => m.updated(name, (c, v))
-        case _ => m
-      }
-    }
 
   /** Date-range read pruned through the GENERATED partition key: the
     * month prefix of an ISO date is ORDER-PRESERVING, so the filter
@@ -3751,19 +3734,17 @@ object TimeTravel extends QueryModule {
   def readAsOfBetweenDates(s: SparkSession, root: String, gen: Int,
       baseCol: String, lo: String, hi: String): DataFrame = {
     val (loM, hiM) = (lo.take(7), hi.take(7))
-    val files = snapshotFiles(root, gen)
-    val gvals = gvalsFor(root, gen)
-    val kept = files.filter { f =>
-      gvals.get(f) match {
+    val snap = snapshot(root, gen)
+    val kept = snap.files.filter { f =>
+      snap.gvals.get(f) match {
         case Some((c, v)) if c == baseCol => v >= loM && v <= hiM
         case _ => true // no generated value recorded: cannot skip
       }
     }
-    val reader: Seq[String] => DataFrame =
-      fl => s.read.parquet(fl.map(f => dataPath(root, f)): _*)
+    val reader = schemaReader(s, root, None)
     val base =
-      if (kept.isEmpty) reader(files).limit(0)
-      else readFilesWithDvs(s, root, gen, kept, reader)
+      if (kept.isEmpty) reader(snap.files).limit(0)
+      else readFilesWithDvs(s, snap, kept, reader)
     base.filter(col(baseCol) >= to_date(lit(lo)) &&
       col(baseCol) <= to_date(lit(hi)))
   }
@@ -3845,33 +3826,15 @@ object TimeTravel extends QueryModule {
   /** The per-file partition VALUES visible at `gen` — the `=`-tagged
     * stats lines [[commitPartitioned]] records. */
   private[graft] def pvalsFor(root: String, gen: Int): Map[String, (String, String)] =
-    foldCkptTail(root, gen, "stats",
-      Map.empty[String, (String, String)]) { (m, line) =>
-      line.split('|') match {
-        case Array(name, c, "=", v) => m.updated(name, (c, v))
-        case _ => m
-      }
-    }
+    snapshot(root, gen).pvals
 
   /** EVERY tagged per-file partition value visible at `gen`, keyed
     * (file, column) → (tag, value): identity `=` lines, generated
     * `~month`/`~day`/`~year` lines and `#bucket:n` lines — the
     * multi-term spec's read-side pruning source ([[FileSkip]] derives
-    * the filter literal's value per tag and drops non-matching files).
-    * Plain 4-field min/max stats lines never collide: their third field
-    * is a number, not a tag. */
+    * the filter literal's value per tag and drops non-matching files). */
   private[graft] def tvalsFor(root: String, gen: Int)
-      : Map[(String, String), (String, String)] =
-    foldCkptTail(root, gen, "stats",
-      Map.empty[(String, String), (String, String)]) { (m, line) =>
-      line.split('|') match {
-        case Array(name, c, tag, v)
-            if tag == "=" || tag.startsWith("~") ||
-              tag.startsWith("#bucket:") =>
-          m.updated((name, c), (tag, v))
-        case _ => m
-      }
-    }
+      : Map[(String, String), (String, String)] = snapshot(root, gen).tvals
 
   /** Per-file tagged value lines (`col|tag|value`, sorted) at `gen`,
     * grouped in ONE pass over the tvals fold — the per-file
@@ -3892,19 +3855,17 @@ object TimeTravel extends QueryModule {
     * The categorical counterpart of [[readAsOfWhere]]'s range pruning. */
   def readAsOfValue(s: SparkSession, root: String, gen: Int,
       partCol: String, value: String): DataFrame = {
-    val files = snapshotFiles(root, gen)
-    val pvals = pvalsFor(root, gen)
-    val kept = files.filter { f =>
-      pvals.get(f) match {
+    val snap = snapshot(root, gen)
+    val kept = snap.files.filter { f =>
+      snap.pvals.get(f) match {
         case Some((c, v)) if c == partCol => v == value
         case _ => true // no partition value recorded: cannot skip
       }
     }
-    val reader: Seq[String] => DataFrame =
-      fl => s.read.parquet(fl.map(f => dataPath(root, f)): _*)
+    val reader = schemaReader(s, root, None)
     val base =
-      if (kept.isEmpty) reader(files).limit(0)
-      else readFilesWithDvs(s, root, gen, kept, reader)
+      if (kept.isEmpty) reader(snap.files).limit(0)
+      else readFilesWithDvs(s, snap, kept, reader)
     base.filter(col(partCol) === value)
   }
 
@@ -3913,31 +3874,16 @@ object TimeTravel extends QueryModule {
     * persists setTransactions in checkpoints for the same reason) plus
     * the tail commits. Without the checkpoint fold, [[expireHistory]]
     * would erase a streaming writer's txn records and a restart would
-    * REPLAY an already-committed epoch as a duplicate generation
-    * (r13 ADVICE). */
+    * REPLAY an already-committed epoch as a duplicate generation. */
   private[graft] def txnsAsOf(root: String, gen: Int): Map[String, Long] =
-    foldCkptTailAt(root, gen, "txn", Map.empty[String, Long]) { at => (m, line) =>
-      line.split("\\|", -1) match {
-        case Array(a, v) if v.toLongOption.nonEmpty =>
-          val ver = v.toLong
-          if (m.get(a).forall(_ < ver)) m.updated(a, ver) else m
-        // read as "no entry", a torn line would let commitTxn land an
-        // epoch that is already committed
-        case _ =>
-          throw new IllegalStateException(
-            s"time travel: malformed txn line '$line' in generation $at " +
-              s"of $root — expected '<appId>|<version>'")
-      }
-    }
+    snapshot(root, gen).txns
 
   /** The newest transaction version committed under `appId` — the read
     * half of [[commitTxn]]'s idempotence contract. O(checkpoint + tail)
     * metadata reads, and retention-proof: the resolved txn map rides
     * every checkpoint. */
-  def lastTxnVersion(root: String, appId: String): Option[Long] = {
-    val cur = currentVersion(root)
-    if (cur < 0) None else txnsAsOf(root, cur).get(appId)
-  }
+  def lastTxnVersion(root: String, appId: String): Option[Long] =
+    latest(root).txns.get(appId)
 
   /** IDEMPOTENT commit (Delta's txnAppId/txnVersion): the commit records
     * `(appId, version)`, and a commit whose version is ≤ the newest one
@@ -3954,9 +3900,10 @@ object TimeTravel extends QueryModule {
       appId: String, version: Long): Int = {
     require(!appId.contains("|"), "txn appId must not contain '|'")
     lockFor(root).synchronized {
-      if (lastTxnVersion(root, appId).exists(_ >= version))
-        currentVersion(root) // replayed write: idempotent skip
-      else commit(s, root, df, txn = Some(s"$appId|$version"))
+      val snap = latest(root)
+      if (snap.txns.get(appId).exists(_ >= version))
+        snap.gen // replayed write: idempotent skip
+      else commitAt(s, snap, df, Nil, Nil, Some(s"$appId|$version"))
     }
   }
 
@@ -4144,7 +4091,7 @@ object TimeTravel extends QueryModule {
         } else {
           val (cfs, commits, ckpts) = listLog(dst)
           (commits.flatMap { case (_, f) =>
-            parseArr(readBytes(cfs, f), "added")
+            parseArr(commitText(cfs, f), "added")
           } ++ ckpts.flatMap { case (v, f) =>
             ckptHandle(cfs, dst, v, f).lines("files")
           }).filter(_.startsWith(prefix)).map(_.stripPrefix(prefix))
@@ -4161,14 +4108,7 @@ object TimeTravel extends QueryModule {
     * table — the CBO food `SupportsReportStatistics.columnStats`
     * serves. */
   private[graft] def ndvsFor(root: String, gen: Int)
-      : Map[(String, String), String] =
-    foldCkptTail(root, gen, "ndvs",
-      Map.empty[(String, String), String]) { (m, line) =>
-      line.split('|') match {
-        case Array(f, c, b64) => m.updated((f, c), b64)
-        case _ => m
-      }
-    }
+      : Map[(String, String), String] = snapshot(root, gen).ndvs
 
   /** ANALYZE (Delta/Iceberg's ANALYZE TABLE … COMPUTE STATISTICS FOR
     * COLUMNS): compute ONE per-file HLL sketch per requested column
@@ -4190,15 +4130,10 @@ object TimeTravel extends QueryModule {
     require(files.nonEmpty, s"time travel: no files to analyze under $root")
     val aggs = cols.map(c => expr(s"hll_sketch_agg(`$c`)").as(c))
     // explicit PHYSICAL read schema: widened tables' narrow files
-    // up-convert instead of crashing the vectorized reader (r19
-    // review). DV-masked rows count into the sketch — a bounded
+    // up-convert instead of crashing the vectorized reader.
+    // DV-masked rows count into the sketch — a bounded
     // overcount CBO tolerates; the next OPTIMIZE/ANALYZE sheds it.
-    val paths = files.map(f => dataPath(root, f))
-    val base = physSchemaAsOf(root, gen) match {
-      case Some(sc) => s.read.schema(sc).parquet(paths: _*)
-      case None => s.read.parquet(paths: _*)
-    }
-    val rows = base
+    val rows = schemaReader(s, root, physSchemaAsOf(root, gen))(files)
       .groupBy(col("_metadata.file_path").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -4227,14 +4162,7 @@ object TimeTravel extends QueryModule {
   /** Per-file recorded row counts visible at `gen` (commit metadata),
     * checkpoint-based like [[statsFor]]. */
   private[graft] def nrowsFor(root: String, gen: Int): Map[String, Long] =
-    foldCkptTail(root, gen, "nrows", Map.empty[String, Long]) { (m, line) =>
-      line.split('|') match {
-        case Array(name, n) =>
-          try m.updated(name, n.toLong)
-          catch { case _: NumberFormatException => m }
-        case _ => m
-      }
-    }
+    snapshot(root, gen).nrows
 
   /** The table's commit HISTORY as a DataFrame (Delta's DESCRIBE
     * HISTORY): one row per commit — version, its (in-commit, r15
@@ -4247,7 +4175,7 @@ object TimeTravel extends QueryModule {
     val (fs, commits, _) = listLog(root)
     var lastTs = 0L
     val rows = commits.map { case (v, f) =>
-      val txt = readBytes(fs, f)
+      val txt = commitText(fs, f)
       val added = parseArr(txt, "added")
       val nr = parseArr(txt, "nrows").flatMap(_.split('|') match {
         case Array(_, n) =>
@@ -4532,7 +4460,7 @@ object TimeTravel extends QueryModule {
     * files carry. Integral keys only (the point-lookup shape). */
   def commitBloomed(s: SparkSession, root: String, df: DataFrame,
       keyCol: String, nFiles: Int, removed: Seq[String] = Nil): Int = {
-    val (cm, phys) = writePrologue(s, root, df)
+    val (cm, phys) = writePrologue(s, latest(root), df)
     val key = cm.getOrElse(keyCol, keyCol)
     val k = 7
     // every staged file is committed: one whose keys are all NULL (or
@@ -4566,17 +4494,7 @@ object TimeTravel extends QueryModule {
   /** The per-file bloom filters visible at generation `gen`,
     * checkpoint-based like [[statsFor]]. */
   private def bloomsFor(root: String, gen: Int)
-      : Map[String, (String, Int, Int, Array[Byte])] =
-    foldCkptTail(root, gen, "blooms",
-      Map.empty[String, (String, Int, Int, Array[Byte])]) { (acc, line) =>
-      line.split('|') match {
-        case Array(name, c, m, k, b64) =>
-          try acc.updated(name, (c, m.toInt, k.toInt,
-            java.util.Base64.getDecoder.decode(b64)))
-          catch { case _: IllegalArgumentException => acc }
-        case _ => acc
-      }
-    }
+      : Map[String, (String, Int, Int, Array[Byte])] = snapshot(root, gen).blooms
 
   /** Point lookup pruned by the log's bloom filters: only files whose
     * filter claims at least one of `keys` — plus filter-less files,
@@ -4586,20 +4504,18 @@ object TimeTravel extends QueryModule {
     * table (TimeTravelSpec asserts the scanned file set). */
   def readAsOfKeys(s: SparkSession, root: String, gen: Int,
       keyCol: String, keys: Seq[Long]): DataFrame = {
-    val files = snapshotFiles(root, gen)
-    val blooms = bloomsFor(root, gen)
-    val kept = files.filter { f =>
-      blooms.get(f) match {
+    val snap = snapshot(root, gen)
+    val kept = snap.files.filter { f =>
+      snap.blooms.get(f) match {
         case Some((c, m, k, bits)) if c == keyCol =>
           keys.exists(key => bloomHit(bits, m, k, key))
         case _ => true // no filter recorded: cannot skip
       }
     }
-    val reader: Seq[String] => DataFrame =
-      fl => s.read.parquet(fl.map(f => dataPath(root, f)): _*)
+    val reader = schemaReader(s, root, None)
     val base =
-      if (kept.isEmpty) reader(files).limit(0)
-      else readFilesWithDvs(s, root, gen, kept, reader)
+      if (kept.isEmpty) reader(snap.files).limit(0)
+      else readFilesWithDvs(s, snap, kept, reader)
     base.filter(col(keyCol).isin(keys: _*))
   }
 
@@ -4610,10 +4526,15 @@ object TimeTravel extends QueryModule {
   private def jsonArr(ls: Seq[String]): String =
     ls.map("\"" + jsonEsc(_) + "\"").mkString("[", ",", "]")
 
-  /** `,"key":[…]`, or nothing for an empty array — how commits and
-    * checkpoints carry their optional arrays. */
+  /** `,"key":[…]`, or nothing for an empty array — how commits carry
+    * their optional arrays. */
   private def jsonField(key: String, ls: Seq[String]): String =
-    if (ls.isEmpty) "" else s""","$key":${jsonArr(ls)}"""
+    if (ls.isEmpty) "" else ckptField(key, ls)
+
+  /** `,"key":[…]` even when empty: a checkpoint writes every key it
+    * resolves, so a missing key means a checkpoint older than the key. */
+  private def ckptField(key: String, ls: Seq[String]): String =
+    s""","$key":${jsonArr(ls)}"""
 
   /** Parquet-footer row count of a committed file — a metadata read (no
     * column data touched); one open per ADDED file per commit, so the
@@ -4645,10 +4566,13 @@ object TimeTravel extends QueryModule {
       ddlExpect: Option[(Map[String, String], Option[String])] = None,
       identityExpect: Option[Option[String]] = None,
       ndvs: Seq[String] = Nil): Int = {
+    // one resolution of the would-be parent per claim attempt: every
+    // gate below reads it, and a lost claim re-resolves
+    var snap = latest(root)
     // the unbypassable write-path protocol gate (wfeatures); write
     // verbs also check before staging so refusals stay cheap
-    requireFeaturesWritable(root)
-    val (fs, _) = fsFor(root)
+    requireWritable(snap)
+    val fs = snap.fs
     val uid = java.util.UUID.randomUUID().toString.take(8)
     fs.mkdirs(new org.apache.hadoop.fs.Path(logDir(root)))
     // per-file row counts, recorded in the commit for history()/auditing
@@ -4684,7 +4608,7 @@ object TimeTravel extends QueryModule {
       s"""{"version":$v,"ts":["$ts"],"added":${jsonArr(added)},""" +
         s""""removed":${jsonArr(removed)}""" +
         optional.map { case (k, ls) => jsonField(k, ls) }.mkString + "}"
-    var v = currentVersion(root) + 1
+    var v = snap.gen + 1
     var committed = false
     while (!committed) {
       lockFor(root).synchronized {
@@ -4696,10 +4620,8 @@ object TimeTravel extends QueryModule {
             s"time travel: commit under $root expected to land as " +
               s"generation $e but the log is at ${v - 1} — a concurrent " +
               "commit interleaved; re-plan against the current head"))
+        lazy val live = if (v == 0) Set.empty[String] else snap.files.toSet
         if (removed.nonEmpty) {
-          val live =
-            if (v == 0) Set.empty[String]
-            else resolveSnapshot(root, v - 1)._1.toSet
           val gone = removed.filterNot(live)
           if (gone.nonEmpty)
             throw new java.util.ConcurrentModificationException(
@@ -4714,14 +4636,8 @@ object TimeTravel extends QueryModule {
         // blind-landing would silently drop that racer's deletes — the
         // same logical-conflict class as the remove validation above
         dvExpect.filter(_.nonEmpty).foreach { exp =>
-          val live =
-            if (v == 0) Set.empty[String]
-            else resolveSnapshot(root, v - 1)._1.toSet
-          val cur =
-            if (v == 0) Map.empty[String, (String, Long)]
-            else dvsFor(root, v - 1)
           val conflicts = exp.collect {
-            case (f, expect) if !live(f) || cur.get(f).map(_._1) != expect => f
+            case (f, expect) if !live(f) || snap.dvs.get(f).map(_._1) != expect => f
           }
           if (conflicts.nonEmpty)
             throw new java.util.ConcurrentModificationException(
@@ -4735,14 +4651,9 @@ object TimeTravel extends QueryModule {
         // moves neither the removed-live check nor dvExpect, yet the
         // staged files carry the stale names and the commit would
         // re-log the pre-DDL schema, silently corrupting the mapping
-        // (r18 ADVICE) — turn it into the explicit conflict every
-        // other race gets.
-        ddlExpect.foreach { case (cmAtRead, schemaAtRead) =>
-          val cmNow =
-            if (v == 0) Map.empty[String, String] else colmapAsOf(root, v - 1)
-          val scNow =
-            if (v == 0) None else schemaAsOf(root, v - 1).map(_.toDDL)
-          if (cmNow != cmAtRead || scNow != schemaAtRead)
+        // — turn it into the explicit conflict every other race gets.
+        ddlExpect.foreach { epoch =>
+          if (ddlEpochOf(snap) != epoch)
             throw new java.util.ConcurrentModificationException(
               s"time travel: DDL conflict under $root — the column " +
                 "mapping or schema changed between the rewrite's read " +
@@ -4754,9 +4665,7 @@ object TimeTravel extends QueryModule {
         // would make blind landing a silent id COLLISION; the conflict
         // sends the caller back to re-assign (commitStagedFiles loops)
         identityExpect.foreach { exp =>
-          val now =
-            if (v == 0) None
-            else propsAsOf(root, v - 1).get(IdentityHwmKey)
+          val now = snap.props.get(IdentityHwmKey)
           if (now != exp)
             throw new IdentityHwmConflict(
               s"time travel: identity high-water conflict under $root " +
@@ -4769,20 +4678,12 @@ object TimeTravel extends QueryModule {
         // file modification times (backup/restore, rsync, a touch of the
         // log dir). Monotonized against the previous commit's EFFECTIVE
         // timestamp (its own ts field; mtime for pre-ts logs) so
-        // same-millisecond neighbors stay strictly increasing — one
-        // extra read of the previous commit per commit.
-        val prevTs =
-          if (v == 0) 0L
-          else {
-            val prev =
-              new org.apache.hadoop.fs.Path(s"${logDir(root)}/${v - 1}.json")
-            if (!fs.exists(prev)) 0L
-            else {
-              val txt = readBytes(fs, prev)
-              commitTsIn(txt).getOrElse(
-                fs.getFileStatus(prev).getModificationTime)
-            }
-          }
+        // same-millisecond neighbors stay strictly increasing — read
+        // through the snapshot, which holds commit v − 1.
+        val prevTs = snap.commits.find(_._1 == v - 1).fold(0L) { case (pv, pf) =>
+          commitTsIn(snap.text(pv, pf))
+            .getOrElse(fs.getFileStatus(pf).getModificationTime)
+        }
         val ts = math.max(System.currentTimeMillis(), prevTs + 1)
         val tmp = new org.apache.hadoop.fs.Path(s"${logDir(root)}/.c-$uid")
         writeBytes(fs, tmp, render(v, ts))
@@ -4791,9 +4692,9 @@ object TimeTravel extends QueryModule {
           committed = true
         } else {
           fs.delete(tmp, false)
-          val latest = currentVersion(root)
-          require(latest >= v, s"commit $v failed but log has no $v")
-          v = latest + 1
+          snap = latest(root)
+          require(snap.gen >= v, s"commit $v failed but log has no $v")
+          v = snap.gen + 1
         }
       }
     }
@@ -4824,16 +4725,18 @@ object TimeTravel extends QueryModule {
     * so racing checkpointers write identical bytes — last rename wins,
     * both are right. Returns the checkpointed version. */
   def checkpoint(root: String): Int = {
-    val (_, commits, _) = listLog(root)
-    require(commits.nonEmpty, s"time travel: nothing to checkpoint under $root")
-    checkpoint(root, commits.last._1)
+    val snap = latest(root)
+    require(snap.gen >= 0, s"time travel: nothing to checkpoint under $root")
+    checkpointAt(snap)
   }
 
   /** Checkpoint a SPECIFIC generation — retention needs an anchor at the
     * expiry boundary, which is usually not the latest version. */
-  def checkpoint(root: String, v: Int): Int = {
-    val (fs, _, _) = listLog(root)
-    val files = resolveSnapshot(root, v)._1
+  def checkpoint(root: String, v: Int): Int = checkpointAt(snapshot(root, v))
+
+  private def checkpointAt(snap: Snapshot): Int = {
+    val (root, v, fs) = (snap.root, snap.gen, snap.fs)
+    val files = snap.files
     val fileSet = files.toSet
     // the checkpoint carries the RESOLVED deletion-vector, constraint,
     // txn, schema and per-file stats/bloom/nrows state too — after
@@ -4841,38 +4744,38 @@ object TimeTravel extends QueryModule {
     // not folded into the checkpoint would silently resurrect masked
     // rows, drop enforcement, replay committed epochs (broken
     // exactly-once), fall back to parquet schema inference, or lose
-    // file-skipping forever (r13 ADVICE). Per-file lines are kept only
-    // for the snapshot's files — retired files' metadata is inert.
-    val dvLines = dvsFor(root, v).toSeq.sortBy(_._1)
+    // file-skipping forever. Per-file lines are kept only for the
+    // snapshot's files — retired files' metadata is inert.
+    val dvLines = snap.dvs.toSeq.sortBy(_._1)
       .map { case (f, (n, c)) => s"$f|$n|$c" }
-    val csLines = constraintsAsOf(root, v).map { case (n, e) => s"$n|$e" }
-    val prLines = propsAsOf(root, v).toSeq.sorted.map { case (k, w) => s"$k|$w" }
-    val cmLines = colmapAsOf(root, v).toSeq.sorted.map { case (l, p) => s"$l|$p" }
+    val csLines = snap.constraints.map { case (n, e) => s"$n|$e" }
+    val prLines = snap.props.toSeq.sorted.map { case (k, w) => s"$k|$w" }
+    val cmLines = snap.colmap.toSeq.sorted.map { case (l, p) => s"$l|$p" }
     val statLines = (
-      statsFor(root, v).collect {
+      snap.stats.collect {
         case ((f, c), (lo, hi)) if fileSet(f) => s"$f|$c|$lo|$hi"
       }.toSeq ++
       // every TAGGED value line (identity =, generated ~month/~day/
       // ~year, #bucket:n) folds in — retention must not lose any
       // term's pruning (tvals subsumes the old pvals+gvals collects)
-      tvalsFor(root, v).collect {
+      snap.tvals.collect {
         case ((f, c), (tag, tv)) if fileSet(f) => s"$f|$c|$tag|$tv"
       }).sorted
-    val bloomRaw = bloomsFor(root, v).collect {
+    val bloomRaw = snap.blooms.collect {
       case (f, (c, m, k, bits)) if fileSet(f) => (s"$f|$c|$m|$k", bits)
     }.toSeq.sortBy(_._1)
-    val ndvRaw = ndvsFor(root, v).collect {
+    val ndvRaw = snap.ndvs.collect {
       case ((f, c), b64) if fileSet(f) =>
         (s"$f|$c", java.util.Base64.getDecoder.decode(b64))
     }.toSeq.sortBy(_._1)
-    val nrowLines = nrowsFor(root, v).collect {
+    val nrowLines = snap.nrows.collect {
       case (f, n) if fileSet(f) => s"$f|$n"
     }.toSeq.sorted
-    val txnLines = txnsAsOf(root, v).toSeq.sorted
+    val txnLines = snap.txns.toSeq.sorted
       .map { case (a, ver) => s"$a|$ver" }
-    val schemaDdl = schemaAsOf(root, v).map(_.toDDL)
-    val featLines = featuresAsOf(root, v).toSeq.sorted
-    val wfeatLines = writerFeaturesAsOf(root, v).toSeq.sorted
+    val schemaDdl = snap.schema.map(_.toDDL)
+    val featLines = snap.features.toSeq.sorted
+    val wfeatLines = snap.writerFeatures.toSeq.sorted
     val fileLevelCount = files.size + dvLines.size + statLines.size +
       bloomRaw.size + nrowLines.size + ndvRaw.size
     val spark = SparkSession.getActiveSession
@@ -4886,16 +4789,16 @@ object TimeTravel extends QueryModule {
         val ndvLines = ndvRaw.map { case (l, bits) =>
           l + "|" + java.util.Base64.getEncoder.encodeToString(bits) }
         s"""{"version":$v,"files":[${files.map("\"" + _ + "\"").mkString(",")}]""" +
-          jsonField("features", featLines) + jsonField("wfeatures", wfeatLines) +
-          jsonField("dvs", dvLines) + jsonField("constraints", csLines) +
-          jsonField("props", prLines) + jsonField("colmap", cmLines) +
-          jsonField("stats", statLines) + jsonField("blooms", bloomLines) +
-          jsonField("ndvs", ndvLines) +
-          jsonField("nrows", nrowLines) + jsonField("txn", txnLines) +
-          jsonField("schemav", schemaDdl.toSeq) + "}"
+          ckptField("features", featLines) + ckptField("wfeatures", wfeatLines) +
+          ckptField("dvs", dvLines) + ckptField("constraints", csLines) +
+          ckptField("props", prLines) + ckptField("colmap", cmLines) +
+          ckptField("stats", statLines) + ckptField("blooms", bloomLines) +
+          ckptField("ndvs", ndvLines) +
+          ckptField("nrows", nrowLines) + ckptField("txn", txnLines) +
+          ckptField("schemav", schemaDdl.toSeq) + "}"
       } else {
         // PARQUET MULTI-PART checkpoint (Delta's multi-part
-        // checkpoints — r18 verdict, the one `weak`): the O(files)
+        // checkpoints): the O(files)
         // payload lands as columnar (k, line, bin) rows written by a
         // DISTRIBUTED job — never a driver-assembled multi-GB string —
         // range-partitioned on (k, line) so a reader's key filter
@@ -4928,14 +4831,14 @@ object TimeTravel extends QueryModule {
         // parts land BEFORE the manifest (a manifest must never point
         // at nothing); a racing checkpointer's dir is logically equal
         // content — first rename wins, the loser discards its parts.
-        // The exists check matters (r19 ADVICE): Hadoop rename onto an
+        // The exists check matters: Hadoop rename onto an
         // existing directory moves the source INTO it and returns true,
         // so without it the loser's dot-dir would nest inside the
         // winner's sidecar and leak instead of being deleted.
         if (fs.exists(partsDest) || !fs.rename(tmpDir, partsDest))
           fs.delete(tmpDir, true)
         else {
-          // TOCTOU re-verify (r20 ADVICE): two racers can BOTH observe
+          // TOCTOU re-verify: two racers can BOTH observe
           // !exists(partsDest); the later rename then moves its temp dir
           // INSIDE the winner's parts dir and still returns true. Our
           // parts land as part-*.parquet, never as a dot-dir, so if
@@ -4946,11 +4849,11 @@ object TimeTravel extends QueryModule {
           if (fs.exists(nested)) fs.delete(nested, true)
         }
         s"""{"version":$v,"format":["parquet"]""" +
-          jsonField("features", (featLines :+ CkptParquetFeature).sorted) +
-          jsonField("wfeatures", wfeatLines) +
-          jsonField("constraints", csLines) + jsonField("props", prLines) +
-          jsonField("colmap", cmLines) + jsonField("txn", txnLines) +
-          jsonField("schemav", schemaDdl.toSeq) + "}"
+          ckptField("features", (featLines :+ CkptParquetFeature).sorted) +
+          ckptField("wfeatures", wfeatLines) +
+          ckptField("constraints", csLines) + ckptField("props", prLines) +
+          ckptField("colmap", cmLines) + ckptField("txn", txnLines) +
+          ckptField("schemav", schemaDdl.toSeq) + "}"
       }
     val tmp = new org.apache.hadoop.fs.Path(
       s"${logDir(root)}/.ck-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -4970,62 +4873,20 @@ object TimeTravel extends QueryModule {
     * the tail commits (ckpt, gen]. */
   private[graft] def resolveSnapshot(root: String, gen: Int)
       : (Seq[String], Int) = {
-    val (fs, commits, ckpts) = listLog(root)
-    require(commits.exists(_._1 == gen),
-      s"time travel: generation $gen does not exist under $root " +
-        s"(latest: ${commits.lastOption.map(_._1).getOrElse(-1)})")
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    val baseFiles: Seq[String] =
-      base.map { case (v, f) =>
-        ckptHandle(fs, root, v, f).lines("files")
-      }.getOrElse(Nil)
-    val tail = commits.filter(c => c._1 > base.map(_._1).getOrElse(-1) &&
-      c._1 <= gen)
-    var files = baseFiles
-    tail.foreach { case (v, f) =>
-      val txt = readBytes(fs, f)
-      requireFeaturesReadable(txt, s"commit $v of $root")
-      val rm = parseArr(txt, "removed").toSet
-      files = files.filterNot(rm) ++ parseArr(txt, "added")
-    }
-    (files, tail.size)
+    val snap = snapshot(root, gen)
+    (snap.files, snap.tail.size)
   }
 
   private[graft] def snapshotFiles(root: String, gen: Int): Seq[String] =
-    resolveSnapshot(root, gen)._1
+    snapshot(root, gen).files
 
   /** The schema in force at generation `gen`: the newest commit ≤ gen
     * that logged one (every commit written since schema logging landed
-    * does). None for pre-schema logs or when the carrying commits were
-    * expired — readers then fall back to parquet inference, the old
-    * behavior. Resolution cost: the commits ≤ gen resolution already
-    * reads; content scan is the tolerant array parser. */
+    * does), or the checkpoint's resolved one — so expiring the only
+    * schemav-carrying commit cannot send readers back to parquet
+    * inference. None for pre-schema logs: readers then infer. */
   private[graft] def schemaAsOf(root: String, gen: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, commits, ckpts) = listLog(root)
-    def fromDdl(lines: Seq[String]) = lines match {
-      case Seq(ddl) =>
-        Some(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-      case _ => None
-    }
-    val base = ckpts.filter(_._1 <= gen).lastOption
-    val baseV = base.map(_._1).getOrElse(-1)
-    // tail commits override the checkpoint's resolved schema; commits
-    // below the checkpoint back-fill pre-schemav checkpoints only —
-    // after retention the checkpoint alone answers (r13 ADVICE: without
-    // this fold, expiry could drop the only schemav-carrying commit and
-    // readers would fall back to parquet inference, resurrecting
-    // dropped/renamed physical names)
-    commits.filter(c => c._1 > baseV && c._1 <= gen).reverseIterator
-      .map(c => fromDdl(parseArr(readBytes(fs, c._2), "schemav")))
-      .collectFirst { case Some(st) => st }
-      .orElse(base.flatMap { case (v, f) =>
-        fromDdl(ckptHandle(fs, root, v, f).lines("schemav"))
-      })
-      .orElse(commits.filter(_._1 <= baseV).reverseIterator
-        .map(c => fromDdl(parseArr(readBytes(fs, c._2), "schemav")))
-        .collectFirst { case Some(st) => st })
-  }
+      : Option[org.apache.spark.sql.types.StructType] = snapshot(root, gen).schema
 
   /** Read the table AS OF generation `gen` — the snapshot the log defines,
     * resolved from commit metadata only (the data dir is never listed).
@@ -5033,18 +4894,12 @@ object TimeTravel extends QueryModule {
     * evolution, add/drop-column shape): files from older generations
     * null-fill columns added later, and columns dropped by `gen` are
     * projected away even though older files still store them — so every
-    * snapshot presents its own generation's schema, stably. */
+    * snapshot presents its own generation's schema, stably. Deletion
+    * vectors in force at `gen` mask their files' rows at scan time (no-op
+    * when none — the common case costs nothing extra). */
   def readAsOf(s: SparkSession, root: String, gen: Int): DataFrame = {
-    val reader: Seq[String] => DataFrame = fl => {
-      val paths = fl.map(f => dataPath(root, f))
-      schemaAsOf(root, gen) match {
-        case Some(schema) => s.read.schema(schema).parquet(paths: _*)
-        case None => s.read.parquet(paths: _*)
-      }
-    }
-    // deletion vectors in force at `gen` mask their files' rows at scan
-    // time (no-op when none — the common case costs nothing extra)
-    readFilesWithDvs(s, root, gen, snapshotFiles(root, gen), reader)
+    val snap = snapshot(root, gen)
+    readFilesWithDvs(s, snap, snap.files, schemaReader(s, root, snap.schema))
   }
 
   /** Table-valued SQL surface (r12 verdict #7): `graft_asof(root, gen)`
@@ -5424,15 +5279,14 @@ object TimeTravel extends QueryModule {
     * directory; a vacuum must not eat an unpublished branch). */
   private def vacuumCandidates(root: String, graceMs: Long)
       : (org.apache.hadoop.fs.FileSystem, Seq[org.apache.hadoop.fs.Path]) = {
-    val (fsL, commits, ckpts) = listLog(root)
-    val branchAdds = branchesFor(root,
-      commits.lastOption.map(_._1).getOrElse(-1)) match {
-      case bs if bs.isEmpty => Set.empty[String]
-      case bs => bs.keySet.flatMap(n =>
-        branchCommits(root, n).flatMap { case (_, f) =>
-          parseArr(readBytes(fsL, f), "added") })
-    }
-    val referenced = (readLog(root).flatMap(_._2) ++
+    val snap = latest(root)
+    val (fsL, commits, ckpts) = (snap.fs, snap.commits, snap.ckpts)
+    val branchAdds = snap.branches.keySet.flatMap(n =>
+      branchCommits(root, n).flatMap { case (_, f) =>
+        parseArr(readBytes(fsL, f), "added") })
+    def every(key: String) =
+      commits.flatMap { case (v, f) => parseArr(snap.text(v, f), key) }
+    val referenced = (every("added") ++
       ckpts.flatMap { case (v, f) =>
         ckptHandle(fsL, root, v, f).lines("files") }).toSet ++
       cloneReferencedNames(root) ++ branchAdds
@@ -5446,8 +5300,7 @@ object TimeTravel extends QueryModule {
       .map(_.getPath)
     // change files referenced by no surviving commit (their commits were
     // expired by retention — the range is unreadable anyway) go too
-    val cdcRef = commits
-      .flatMap { case (_, f) => parseArr(readBytes(fsL, f), "cdc") }.toSet
+    val cdcRef = every("cdc").toSet
     val cd = new org.apache.hadoop.fs.Path(cdcDir(root))
     val cdcGone = (if (fs.exists(cd)) fs.listStatus(cd).toSeq else Seq.empty)
       .filter(st => st.isFile && !cdcRef(st.getPath.getName) && aged(st))
@@ -5477,13 +5330,12 @@ object TimeTravel extends QueryModule {
     * while checkpoint-listed files stay. The Delta retention/VACUUM
     * pair, as two explicit library calls. */
   def expireHistory(root: String, keepFrom: Int): Seq[String] = {
-    val (fs, commits, ckpts) = listLog(root)
+    val snap = latest(root)
+    val (fs, commits, ckpts) = (snap.fs, snap.commits, snap.ckpts)
     // TAGS pin their generations (Iceberg keeps tagged snapshots):
     // expiring below one would turn `VERSION AS OF 'name'` into a
     // dangling reference — refuse loudly until the tag is dropped
-    val pinned = commits.lastOption
-      .map(c => tagsFor(root, c._1).filter(_._2 < keepFrom))
-      .getOrElse(Map.empty)
+    val pinned = snap.tags.filter(_._2 < keepFrom)
     require(pinned.isEmpty,
       s"time travel: cannot expire below $keepFrom — tags pin earlier " +
         s"generations: ${pinned.toSeq.sorted
@@ -5492,9 +5344,7 @@ object TimeTravel extends QueryModule {
     // BRANCHES pin their base generations the same way (r18): the
     // branch head resolves through the base snapshot — expiring it
     // would orphan every unpublished branch commit
-    val pinnedB = commits.lastOption
-      .map(c => branchesFor(root, c._1).filter(_._2 < keepFrom))
-      .getOrElse(Map.empty)
+    val pinnedB = snap.branches.filter(_._2 < keepFrom)
     require(pinnedB.isEmpty,
       s"time travel: cannot expire below $keepFrom — branches pin " +
         s"earlier bases: ${pinnedB.toSeq.sorted

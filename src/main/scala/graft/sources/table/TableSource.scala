@@ -144,27 +144,26 @@ final case class GraftLogTable(tableSchema: StructType, root: String,
     gen: Int, branch: Option[String] = None)
     extends Table with SupportsRead with SupportsMetadataColumns {
 
-  // the snapshot's file set and its log metadata, resolved ONCE per
-  // table. With `branch` set this is the BRANCH-HEAD read surface
-  // (r19 WAP audit in pure SQL): files come from the branch fold at
-  // its BASE generation (`gen` IS the base), so every base-keyed
+  // the snapshot's file set and its log metadata, resolved from ONE
+  // log resolution per table. With `branch` set this is the BRANCH-HEAD
+  // read surface (WAP audit in pure SQL): files come from the branch
+  // fold at its BASE generation (`gen` IS the base), so every base-keyed
   // metadatum below — stats, DVs, defaults, widening, mapping — reads
   // exactly as the branch sees the world; branch-staged files simply
   // lack stats/pvals/nrows entries and scan conservatively.
+  @transient private lazy val snap = TimeTravel.snapshot(root, gen)
   private[table] val files: Seq[String] = branch match {
     case Some(b) => TimeTravel.branchHeadFiles(root, b)
-    case None => TimeTravel.snapshotFiles(root, gen)
+    case None => snap.files
   }
-  private[table] val stats: Map[(String, String), (Long, Long)] =
-    TimeTravel.statsFor(root, gen)
-  private[table] val pvals: Map[String, (String, String)] =
-    TimeTravel.pvalsFor(root, gen)
+  private[table] val stats: Map[(String, String), (Long, Long)] = snap.stats
+  private[table] val pvals: Map[String, (String, String)] = snap.pvals
 
   /** Tagged per-file partition values ((file, col) → (tag, value)):
     * identity `=`, generated `~month`/`~day`/`~year`, and `#bucket:n`
     * lines — the multi-term spec's pruning source (r14 verdict #1). */
   private[table] lazy val tvals: Map[(String, String), (String, String)] =
-    TimeTravel.tvalsFor(root, gen)
+    snap.tvals
 
   /** LOGICAL → PHYSICAL column names at this snapshot (the q194 column
     * mapping; empty on unmapped tables). The scan runs entirely under
@@ -175,7 +174,7 @@ final case class GraftLogTable(tableSchema: StructType, root: String,
     * source. */
   private[table] val colmap: Map[String, String] = branch match {
     case Some(b) => TimeTravel.branchColmapOf(root, b)
-    case None => TimeTravel.colmapAsOf(root, gen)
+    case None => snap.colmap
   }
   private[table] def phys(c: String): String = colmap.getOrElse(c, c)
   private[table] val logicalOf: Map[String, String] = colmap.map(_.swap)
@@ -187,7 +186,7 @@ final case class GraftLogTable(tableSchema: StructType, root: String,
     * per table from the `graft.default.*` properties; empty — zero
     * overhead — on default-free tables. */
   private[table] lazy val defaults: Map[String, Any] = {
-    val raw = TimeTravel.defaultsFor(root, gen)
+    val raw = snap.defaults
     if (raw.isEmpty) Map.empty
     else raw.flatMap { case (phys, v) =>
       val logical = logicalOf.getOrElse(phys, phys)
@@ -211,21 +210,19 @@ final case class GraftLogTable(tableSchema: StructType, root: String,
     * the footer-aggregate refusal set — pre-widening footers carry
     * narrow-typed statistics. Empty (zero overhead) on never-widened
     * tables. */
-  private[table] lazy val widened: Set[String] =
-    TimeTravel.widenedFor(root, gen)
+  private[table] lazy val widened: Set[String] = snap.widened
 
   /** Per-file row counts from the commit log's `nrows` lines (empty map
     * entries for pre-nrows commits) — `estimateStatistics`' rowCount
     * source. */
-  private[table] lazy val fileRows: Map[String, Long] =
-    TimeTravel.nrowsFor(root, gen)
+  private[table] lazy val fileRows: Map[String, Long] = snap.nrows
 
   /** Per-file column-NDV sketches from the log's `ndvs` lines
     * ([[TimeTravel.analyzeNdv]]), decoded once per table — the
     * column-statistics source CBO join estimation feeds on. Empty
     * (zero overhead) on never-analyzed tables. */
   private[table] lazy val ndvSketches: Map[(String, String), Array[Byte]] =
-    TimeTravel.ndvsFor(root, gen).map { case (k, b64) =>
+    snap.ndvs.map { case (k, b64) =>
       k -> java.util.Base64.getDecoder.decode(b64)
     }
 
@@ -257,7 +254,7 @@ final case class GraftLogTable(tableSchema: StructType, root: String,
     * merge-on-read DV delete (q188) composes with every catalog read,
     * Delta's contract. Empty on DV-free tables: zero overhead. */
   private[table] val dvs: Map[String, (String, Long)] = {
-    val all = TimeTravel.dvsFor(root, gen)
+    val all = snap.dvs
     files.flatMap(f => all.get(f).map(f -> _)).toMap
   }
 

@@ -40,6 +40,15 @@ trait SparkSpec extends AnyFunSuite {
     finally sc.removeSparkListener(listener)
   }
 
+  /** `_graft_log` listings and commit-file reads the table format makes
+    * while `body` runs, as (listings, commit reads). */
+  def logReadsDuring(body: => Unit): (Long, Long) = {
+    import graft.operators.TimeTravel.{commitReads, logListings}
+    val (l0, r0) = (logListings.get, commitReads.get)
+    body
+    (logListings.get - l0, commitReads.get - r0)
+  }
+
   /** Child processes this JVM starts while `body` runs, counted from the
     * `jdk.ProcessStart` events of an in-process flight recording. */
   def processStartsDuring(body: => Unit): Int = {
